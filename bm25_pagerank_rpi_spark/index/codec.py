@@ -131,120 +131,14 @@ def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return docs, tfs, factors
 
 
-def encode_sorted_run(
-    terms: np.ndarray,
-    rids: np.ndarray,
-    docs: np.ndarray,
-    tfs: np.ndarray,
-    factors: np.ndarray,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    blocks_per_range: int = 1,
-    block_id_base: int = 0,
-) -> dict:
-    """Encode a whole sorted run of postings — MANY (term, range_id) groups
-    at once — into block rows, byte-identical to calling
-    ``blocks_for_term`` per group (tests pin this equivalence).
-
-    Input arrays must be sorted by (term, range_id, doc_int) with
-    (term, range_id, doc_int) unique — exactly what the blocks stage's
-    ``repartition().sortWithinPartitions()`` delivers. All O(n) work is
-    vectorized numpy over the full run (group/block boundary discovery,
-    delta-gap, one varint pass, ``reduceat`` bounds); the only per-block
-    Python is three byte-slices out of the contiguous varint buffers.
-    This replaces a per-group loop whose ~30 small numpy calls per group
-    dominated the blocks stage on zipf vocabularies (hundreds of
-    microseconds per group x 10^5..10^6 groups per partition).
-
-    Returns a dict of columns matching BLOCK_SCHEMA order.
-    """
-    n = docs.size
-    empty: dict = {
-        "term": np.empty(0, dtype=object),
-        "range_id": np.empty(0, dtype=np.int64),
-        "block_id": np.empty(0, dtype=np.int64),
-        "n_postings": np.empty(0, dtype=np.int32),
-        "min_doc": np.empty(0, dtype=np.int64),
-        "max_doc": np.empty(0, dtype=np.int64),
-        "max_factor": np.empty(0, dtype=np.float64),
-        "min_factor": np.empty(0, dtype=np.float64),
-        "docs_enc": [],
-        "tfs_enc": [],
-        "factors_enc": [],
-    }
-    if n == 0:
-        return empty
-    d = np.ascontiguousarray(docs, dtype=np.int64)
-    t = np.ascontiguousarray(tfs, dtype=np.int64)
-    f = np.ascontiguousarray(factors, dtype=np.float64)
-    r = np.ascontiguousarray(rids, dtype=np.int64)
-
-    # group starts: first row of each (term, range_id) group
-    gchange = np.empty(n, dtype=bool)
-    gchange[0] = True
-    gchange[1:] = (terms[1:] != terms[:-1]) | (r[1:] != r[:-1])
-    gstarts = np.flatnonzero(gchange)
-    gsizes = np.diff(np.append(gstarts, n))
-    # per-row offset within its group
-    off = np.arange(n, dtype=np.int64) - np.repeat(gstarts, gsizes)
-    # block starts: every group start plus every block_size-th row within
-    bmask = gchange | (off % block_size == 0)
-    bstarts = np.flatnonzero(bmask)
-    bends = np.append(bstarts[1:], n)
-
-    # doc ids must be strictly increasing inside every group
-    assert (np.diff(d) > 0)[~gchange[1:]].all() if n > 1 else True, (
-        "doc ids must be strictly increasing within a (term, range_id) group"
-    )
-
-    # delta-gap over the whole run: absolute value at each BLOCK start
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(d[0])
-    np.subtract(d[1:], d[:-1], out=gaps[1:].view(np.int64), casting="unsafe")
-    gaps[bstarts] = d[bstarts].astype(np.uint64)
-
-    docs_buf, docs_nb = _varint_encode_raw(gaps)
-    tfs_buf, tfs_nb = _varint_encode_raw((t - 1).astype(np.uint64))
-    docs_cum = np.concatenate(([0], np.cumsum(docs_nb)))
-    tfs_cum = np.concatenate(([0], np.cumsum(tfs_nb)))
-    docs_bytes = docs_buf.tobytes()
-    tfs_bytes = tfs_buf.tobytes()
-    facs_bytes = f.tobytes()
-
-    max_f = np.maximum.reduceat(f, bstarts)
-    min_f = np.minimum.reduceat(f, bstarts)
-    block_ids = (
-        block_id_base
-        + r[bstarts] * blocks_per_range
-        + off[bstarts] // block_size
-    )
-
-    da, db = docs_cum[bstarts], docs_cum[bends]
-    ta, tb = tfs_cum[bstarts], tfs_cum[bends]
-    return {
-        "term": terms[bstarts],
-        "range_id": r[bstarts],
-        "block_id": block_ids,
-        "n_postings": (bends - bstarts).astype(np.int32),
-        "min_doc": d[bstarts],
-        "max_doc": d[bends - 1],
-        "max_factor": max_f,
-        "min_factor": min_f,
-        "docs_enc": [docs_bytes[a:b] for a, b in zip(da, db)],
-        "tfs_enc": [tfs_bytes[a:b] for a, b in zip(ta, tb)],
-        "factors_enc": [
-            facs_bytes[a * 8 : b * 8] for a, b in zip(bstarts, bends)
-        ],
-    }
-
-
 def _binary_from_offsets(
     data: np.ndarray, offsets64: np.ndarray, nb: int
 ) -> "pa.Array":
     """Zero-copy pa.binary array over ``data`` sliced at ``offsets64``.
 
     pa.binary() carries int32 offsets; a partition whose encoded buffer
-    exceeds 2 GiB would silently wrap and corrupt the index. The
-    TARGET_ENCODE_ROWS split is advisory, so fail loudly instead
+    exceeds 2 GiB would silently wrap and corrupt the index. The encode
+    shuffle's rows-per-task sizing is advisory, so fail loudly instead
     (pinned by test_codec.py::test_binary_offsets_overflow_guard).
     """
     import pyarrow as pa
@@ -270,33 +164,30 @@ def encode_sorted_run_arrow(
     block_size: int = DEFAULT_BLOCK_SIZE,
     blocks_per_range: int = 1,
     block_id_base: int = 0,
-    term_codes: np.ndarray | None = None,
 ):
-    """Arrow-native twin of ``encode_sorted_run`` — identical block rows
-    (tests pin the equivalence), but the term column never leaves Arrow:
+    """Encode a whole sorted run of postings — MANY (term, range_id) groups
+    at once — into block rows, byte-identical to calling
+    ``blocks_for_term`` per group with ``first_block_id = block_id_base +
+    range_id * blocks_per_range`` (tests/test_codec.py pins this).
+
+    Input arrays must be sorted by (term, range_id, doc_int) with
+    (term, range_id, doc_int) unique — exactly what the encode shuffle's
+    ``repartition().sortWithinPartitions()`` delivers. All O(n) work is
+    vectorized over the full run and the term column never leaves Arrow:
 
     - group-boundary discovery compares the Arrow string array with its
       own 1-shifted slice via ``pyarrow.compute.not_equal`` (vectorized C
-      string compare) instead of an object-dtype numpy comparison that
-      does 1 Python-level ``str.__eq__`` per posting;
+      string compare);
     - per-block output terms come from ``pc.take`` at block starts, so
       only ~#blocks strings are ever touched, not #postings;
+    - delta-gap, one varint pass and ``reduceat`` factor bounds cover
+      every block of the run at once;
     - the three binary columns are built with ``pa.Array.from_buffers``
-      directly over the contiguous varint buffers + offset arrays — the
-      per-block byte-slice list comprehensions disappear.
+      directly over the contiguous varint buffers + offset arrays.
 
-    With ``mapInPandas`` the Arrow->pandas conversion alone materialized
-    one PyObject per posting for the term column (~55-60% of the blocks
-    stage in profile); this path (used via ``mapInArrow``) has no per-row
-    or per-block Python at all. Returns a ``pa.RecordBatch`` in
-    BLOCK_SCHEMA column order, or None for empty input.
-
-    ``term_codes``: optional dictionary-encoded form of the term column.
-    When given, ``terms`` is the DICTIONARY (one entry per distinct term)
-    and ``term_codes`` the per-posting integer code — boundary discovery
-    then compares int arrays and per-block terms come from one ``take``
-    into the dictionary. This is the path the sort-free partition encoder
-    uses (``pc.dictionary_encode`` + ``np.lexsort`` replace the JVM sort).
+    There is no per-row or per-block Python at all. Returns a
+    ``pa.RecordBatch`` in BLOCK_SCHEMA column order, or None for empty
+    input.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -311,9 +202,7 @@ def encode_sorted_run_arrow(
 
     gchange = np.empty(n, dtype=bool)
     gchange[0] = True
-    if n > 1 and term_codes is not None:
-        gchange[1:] = (term_codes[1:] != term_codes[:-1]) | (r[1:] != r[:-1])
-    elif n > 1:
+    if n > 1:
         neq_term = pc.not_equal(
             terms.slice(1, n - 1), terms.slice(0, n - 1)
         ).to_numpy(zero_copy_only=False)
@@ -348,13 +237,9 @@ def encode_sorted_run_arrow(
     block_ids = (
         block_id_base + r[bstarts] * blocks_per_range + off[bstarts] // block_size
     )
-    if term_codes is not None:
-        out_terms = pc.take(terms, pa.array(term_codes[bstarts]))
-    else:
-        out_terms = pc.take(terms, pa.array(bstarts, type=pa.int64()))
     return pa.RecordBatch.from_arrays(
         [
-            out_terms,
+            pc.take(terms, pa.array(bstarts, type=pa.int64())),
             pa.array(r[bstarts]),
             pa.array(block_ids),
             pa.array((bends - bstarts).astype(np.int32)),

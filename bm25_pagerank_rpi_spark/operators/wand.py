@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import MAX_DOCUMENTS
+from ..functions.tokenize import split_tokens
 from ..index import codec
 from ..sources.catalog import IndexCatalog
 from . import scorer
@@ -296,46 +297,34 @@ def wand_topk(
     if plan is None:
         return _empty_result(spark)
     return _execute_plan(
-        spark, plan, _blocks_with_range(cat),
+        spark, plan, _blocks(cat),
         cat.doc_meta().select("doc_int", "doc_id"), k,
         deleted=cat.deleted_doc_ints(),
     )
 
 
-def _term_stats(cat: IndexCatalog) -> DataFrame:
-    """Per-term stats projection for query planning; tolerates indexes
-    written before the adaptive tail salt (no has_tail column)."""
-    t = cat.terms()
-    has_tail = (
-        F.col("has_tail") if "has_tail" in t.columns else F.lit(0)
-    )
-    return t.select(
-        "term", "idf", "bucket", "max_factor", "min_factor",
-        has_tail.cast("int").alias("has_tail"),
-    )
-
-
-def _blocks_with_range(cat: IndexCatalog) -> DataFrame:
-    """Blocks table with the WAND shard key. Pre-v3 indexes stored no
-    range_id column (the shard id was block_id arithmetic); synthesize it
-    with the old formula from the manifest config so on-disk indexes
-    built by older versions stay queryable, or fail with an actionable
-    message when the manifest predates the config block too."""
-    b = cat.blocks()
-    if "range_id" in b.columns:
-        return b
-    cfg = cat.read_manifest().get("config", {})
-    range_rows, block_size = cfg.get("range_rows"), cfg.get("block_size")
-    if not range_rows or not block_size:
+def _require_v3(cat: IndexCatalog, df: DataFrame, column: str) -> DataFrame:
+    """Indexes written before the stored WAND shard key (``range_id`` in
+    blocks) and the adaptive tail salt (``has_tail`` in terms) cannot be
+    served; fail with the fix instead of an AnalysisException."""
+    if column not in df.columns:
         raise ValueError(
-            f"index at {cat.root} has no range_id column and its manifest "
-            "records no range_rows/block_size — index format too old, rebuild "
-            "with plans.index_build.build_index"
+            f"index at {cat.root} has no {column} column — index format too "
+            "old, rebuild with plans.index_build.build_index"
         )
-    blocks_per_range = range_rows // block_size + 1
-    return b.withColumn(
-        "range_id", (F.col("block_id") / F.lit(blocks_per_range)).cast("long")
+    return df
+
+
+def _term_stats(cat: IndexCatalog) -> DataFrame:
+    """Per-term stats projection for query planning."""
+    return _require_v3(cat, cat.terms(), "has_tail").select(
+        "term", "idf", "bucket", "max_factor", "min_factor", "has_tail"
     )
+
+
+def _blocks(cat: IndexCatalog) -> DataFrame:
+    """Blocks table with its stored WAND shard key ``range_id``."""
+    return _require_v3(cat, cat.blocks(), "range_id")
 
 
 @dataclass
@@ -405,12 +394,11 @@ def _plan_local(
     stats: dict[str, tuple[float, int, float, float, int]],
 ) -> _QueryPlan | None:
     """Pure-driver planning against an in-memory term-stats dict: zero
-    Spark jobs. Tokenization is Python ``str.split()`` — the pinned twin
-    of functions/tokenize.tokens_col (both split on Unicode whitespace
-    runs and drop empties; tests/test_tokenize.py pins the equivalence)."""
+    Spark jobs. Tokenization is ``functions.tokenize.split_tokens``, the
+    pinned Python twin of ``tokens_col`` (tests/test_tokenize.py)."""
     rows = []
     for qid, text in query_rows:
-        for term, mult in Counter((text or "").split()).items():
+        for term, mult in Counter(split_tokens(text)).items():
             st = stats.get(term)
             if st is None:
                 continue  # no postings -> term contributes nothing
@@ -528,11 +516,11 @@ class WandSession:
         if preload_blocks:
             from pyspark import StorageLevel
 
-            self.blocks = _blocks_with_range(cat).persist(
+            self.blocks = _blocks(cat).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
         else:
-            self.blocks = _blocks_with_range(cat)
+            self.blocks = _blocks(cat)
         # auto mode: collect the vocabulary into the driver only when it is
         # small enough to be safe there; otherwise stay distributed. The
         # vocab size comes from the build manifest (a local JSON read) and

@@ -30,6 +30,7 @@ DataFrame scorer and the WAND scorer.
 from __future__ import annotations
 
 import math
+import re
 from dataclasses import dataclass, field
 
 K1 = 1.2
@@ -37,9 +38,16 @@ B = 0.75
 MAX_DOCUMENTS = 1000
 
 
+# Unicode White_Space (Go unicode.IsSpace): Python's whitespace class minus
+# \x1c-\x1f, which str.split() treats as whitespace but strings.Fields
+# keeps inside tokens. Written independently of functions/tokenize.py so
+# the oracle checks the package's rule instead of sharing it.
+_FIELDS_SEP = re.compile(r"[^\S\x1c-\x1f]+")
+
+
 def tokenize(text: str) -> list[str]:
     """strings.Fields — whitespace-run split, Unicode whitespace."""
-    return text.split()
+    return [t for t in _FIELDS_SEP.split(text) if t]
 
 
 def idf_map(index: dict[str, list[tuple[str, int]]], doc_count: int) -> dict[str, float]:

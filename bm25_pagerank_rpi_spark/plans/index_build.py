@@ -13,8 +13,10 @@ SURVEY.md §2.7 / §4 "checkpoint/resume"):
                     per-range partitions + per-partition row_number + offset
                     join — no global single-partition sort, no RDDs).
                     Also writes corpus_stats (doc_count, avg_doc_length).
-  2. postings     — explode tokens -> (term, doc_int, tf, doc_length),
-                    one hash aggregate; written term-bucketed for pruning.
+  2. postings     — the fused tokenize+TF ``mapInArrow`` kernel turns
+                    (doc_int, doc_length, text) rows straight into
+                    aggregated (term, doc_int, tf, doc_length[, positions])
+                    postings; written term-bucketed for pruning.
   3. blocks       — delta+varint compressed, docID-sorted posting blocks
                     with block-max score metadata. Head-term skew is defused
                     STRUCTURALLY: grouping key is (term, range_id) where
@@ -28,25 +30,28 @@ SURVEY.md §2.7 / §4 "checkpoint/resume"):
                     manifest (the native replacement for the reference's
                     eval-service POST, internal/utils/evaluation.go:13-127).
 
-Scale notes: stages shuffle on (doc_id), (term, doc_int), (term, range_id)
-respectively — all well-distributed keys; AQE + the range salt bound the
-largest single task by range_rows regardless of term skew.
+Stages 2-4 are built from public pieces that every other index writer
+reuses, so one rule has one definition: ``tf_postings`` (incremental
+append), ``route_postings`` + ``encode_blocks`` (compaction, delta append,
+minor compaction, merge, prune) and ``terms_from_blocks``.
+
+Scale notes: stages shuffle on (doc_id), (bucket, doc stripe),
+(term, range_id) respectively — all well-distributed keys; AQE + the range
+salt bound the largest single task by range_rows regardless of term skew.
 """
 
 from __future__ import annotations
 
 import math
 import time
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import B, K1
 from ..functions.ordinal import dense_ordinal
-from ..functions.tokenize import tokens_col
+from ..functions.tokenize import split_tokens, tokens_col
 from ..index import codec
 from ..sources.catalog import IndexCatalog, term_bucket
 from ..sources.transcripts import with_doc_identity
@@ -59,109 +64,15 @@ BLOCK_SCHEMA = (
 )
 
 
-def _make_encode_fn(block_size: int, blocks_per_range: int):
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, range_id = key
-        doc_ints = pdf["doc_int"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        factors = pdf["factor"].to_numpy(dtype=np.float64)
-        blocks = codec.blocks_for_term(
-            doc_ints, tfs, factors, block_size=block_size,
-            first_block_id=int(range_id) * blocks_per_range,
-        )
-        return pd.DataFrame(
-            [
-                {
-                    "term": term,
-                    "range_id": int(range_id),
-                    "block_id": b["block_id"],
-                    "n_postings": b["count"],
-                    "min_doc": b["min_doc"],
-                    "max_doc": b["max_doc"],
-                    "max_factor": b["max_factor"],
-                    "min_factor": b["min_factor"],
-                    "docs_enc": b["docs_enc"],
-                    "tfs_enc": b["tfs_enc"],
-                    "factors_enc": b["factors_enc"],
-                }
-                for b in blocks
-            ]
-        )
-
-    return encode
-
-
-def _make_encode_partition_fn(
-    block_size: int, blocks_per_range: int, block_id_base: int = 0
-):
-    """Partition-level encoder: one Arrow stream per TASK instead of one
-    Arrow round-trip per (term, range_id) group. Input partitions must be
-    hash-distributed by (term, range_id) and sorted by
-    (term, range_id, doc_int); groups spanning Arrow batch boundaries are
-    buffered (a group holds at most range_rows postings)."""
-
-    def _boundaries(terms: np.ndarray, rids: np.ndarray) -> np.ndarray:
-        change = np.empty(terms.size, dtype=bool)
-        change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (rids[1:] != rids[:-1])
-        return np.flatnonzero(change)
-
-    def encode_groups(pdf: pd.DataFrame):
-        """Input rows are sorted by (term, range_id, doc_int) -> groups are
-        CONTIGUOUS; the whole run encodes in ONE vectorized codec pass
-        (codec.encode_sorted_run) — per-block Python is three byte
-        slices, not a numpy-call cascade per group (the per-group loop
-        ran at ~3k groups/sec/core and dominated the blocks stage on
-        zipf vocabularies)."""
-        if pdf.empty:
-            return None
-        cols = codec.encode_sorted_run(
-            pdf["term"].to_numpy(),
-            pdf["range_id"].to_numpy(dtype=np.int64),
-            pdf["doc_int"].to_numpy(dtype=np.int64),
-            pdf["tf"].to_numpy(dtype=np.int64),
-            pdf["factor"].to_numpy(dtype=np.float64),
-            block_size=block_size,
-            blocks_per_range=blocks_per_range,
-            block_id_base=block_id_base,
-        )
-        return pd.DataFrame(cols) if len(cols["term"]) else None
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None:
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if pdf.empty:
-                continue
-            # keep the (possibly batch-spanning) last group buffered
-            starts = _boundaries(
-                pdf["term"].to_numpy(), pdf["range_id"].to_numpy(dtype=np.int64)
-            )
-            last_start = int(starts[-1])
-            head, pending = pdf.iloc[:last_start], pdf.iloc[last_start:]
-            if len(head):
-                out = encode_groups(head)
-                if out is not None:
-                    yield out
-        if pending is not None and len(pending):
-            out = encode_groups(pending)
-            if out is not None:
-                yield out
-
-    return fn
-
-
 def _make_encode_arrow_fn(
     block_size: int, blocks_per_range: int, block_id_base: int = 0
 ):
-    """Arrow-native partition encoder for ``mapInArrow``: same contract as
-    ``_make_encode_partition_fn`` (input hash-distributed by
-    (term, range_id), sorted by (term, range_id, doc_int); groups spanning
-    batch boundaries buffered) but the term column never converts to
-    pandas object dtype — profiling showed that conversion plus the
-    per-posting Python string compares were ~55-60% of the blocks stage.
+    """Partition encoder for ``mapInArrow``: input hash-distributed by
+    (term, range_id) and sorted by (term, range_id, doc_int); a group
+    spanning an Arrow batch boundary is buffered into the next batch (a
+    group holds at most range_rows postings). The term column never
+    converts to pandas object dtype — that conversion plus per-posting
+    Python string compares were ~55-60% of the blocks stage in profile.
     All per-batch work is pyarrow.compute / numpy; see
     codec.encode_sorted_run_arrow."""
     import pyarrow as pa
@@ -215,155 +126,8 @@ def _make_encode_arrow_fn(
     return fn
 
 
-def _make_encode_unsorted_fn(
-    block_size: int, blocks_per_range: int, block_id_base: int = 0
-):
-    """Sort-free partition encoder for ``mapInArrow``: input partitions are
-    hash-distributed by (term, range_id) but NOT sorted — the JVM
-    ``sortWithinPartitions`` is replaced by a Python-side
-    ``pc.dictionary_encode`` of the term column plus one ``np.lexsort``
-    over (code, range_id, doc_int) int arrays. Grouping only needs
-    (term, range_id) groups CONTIGUOUS and doc-sorted within — any
-    consistent term order works, so dictionary codes (order of first
-    occurrence) are fine, and no string is ever compared or copied per
-    posting.
-
-    MEASURED WORSE than the sorted streaming path and therefore NOT used
-    by the build: same-window interleaved A/B (tools/ab_blocks.py, 48M
-    postings, 8 cores) put it ~25% slower than JVM sort + streaming
-    ``_make_encode_arrow_fn`` — whole-partition buffering does ~6 full
-    passes (concat, dictionary, lexsort, permutations) with cold-cache
-    locality, while Tungsten's radix sort + 512k-row streamed batches
-    stay cache-warm. Kept as the A/B counterfactual; the memory contract
-    (caller bounds partition volume, ~TARGET_ENCODE_ROWS rows/task)
-    still holds if it is ever re-evaluated on different hardware."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def fn(batches):
-        batch_list = list(batches)
-        if not batch_list:
-            return
-        tbl = pa.Table.from_batches(batch_list).combine_chunks()
-        n = tbl.num_rows
-        if n == 0:
-            return
-        term = tbl.column("term")
-        if term.num_chunks != 1:  # combine_chunks guarantees 1 for n > 0
-            term = term.combine_chunks()
-        dic = pc.dictionary_encode(term.chunk(0) if hasattr(term, "chunk") else term)
-        codes = dic.indices.to_numpy().astype(np.int64, copy=False)
-        rids = tbl.column("range_id").to_numpy()
-        docs = tbl.column("doc_int").to_numpy()
-        order = np.lexsort((docs, rids, codes))
-        out = codec.encode_sorted_run_arrow(
-            dic.dictionary,
-            rids[order],
-            docs[order],
-            tbl.column("tf").to_numpy()[order],
-            tbl.column("factor").to_numpy()[order],
-            block_size=block_size,
-            blocks_per_range=blocks_per_range,
-            block_id_base=block_id_base,
-            term_codes=codes[order],
-        )
-        if out is not None:
-            yield out
-
-    return fn
-
-
-# encode-task sizing: one task buffers its whole partition (see
-# _make_encode_unsorted_fn), so partitions target this many postings
-# (~150 MB Arrow + permutation) regardless of cluster size
-TARGET_ENCODE_ROWS = 3_000_000
-
-
-def _make_tf_agg_arrow_fn():
-    """Streaming run-length TF aggregation for ``mapInArrow``: input rows
-    are raw (term, doc_int, doc_length, bucket) TOKEN occurrences,
-    hash-distributed on the postings WRITE layout (bucket, doc-stripe)
-    and sorted by (term, doc_int); consecutive equal (term, doc_int)
-    runs collapse to one posting row with tf = run length.
-
-    Rationale tried: on zipf vocabularies most (term, doc_int) pairs are
-    unique, so Catalyst's partial aggregation reduces almost nothing while
-    the groupBy plan pays TWO full exchanges (agg shuffle + write-layout
-    repartition); fusing the agg into the write-layout shuffle moves each
-    token exactly once. Correct because bucket = f(term) and
-    stripe = f(doc_int), so every (term, doc_int) group is complete within
-    its partition; batch-spanning groups buffer like _make_encode_arrow_fn.
-
-    MEASURED WORSE and therefore NOT used by the build: at 8 cores on the
-    76M-token zipf corpus this path ran 3-4x slower than the groupBy plan
-    (phase diagnosis: the mapInArrow agg added ~2x the stage's whole JVM
-    cost) — unlike the block encoder, whose output is tiny, the TF agg
-    round-trips BOTH directions at corpus scale (~140M rows of strings
-    through Arrow IPC), while Catalyst's hash agg stays inside whole-stage
-    codegen. Kept as the documented counterfactual with a parity test."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def _concat(b1: pa.RecordBatch, b2: pa.RecordBatch) -> pa.RecordBatch:
-        tbl = pa.Table.from_batches([b1, b2]).combine_chunks()
-        return tbl.to_batches()[0]
-
-    def _change(batch: pa.RecordBatch) -> np.ndarray:
-        n = batch.num_rows
-        terms = batch.column("term")
-        docs = batch.column("doc_int").to_numpy()
-        change = np.empty(n, dtype=bool)
-        change[0] = True
-        if n > 1:
-            change[1:] = pc.not_equal(
-                terms.slice(1, n - 1), terms.slice(0, n - 1)
-            ).to_numpy(zero_copy_only=False) | (docs[1:] != docs[:-1])
-        return change
-
-    def _agg(batch: pa.RecordBatch) -> pa.RecordBatch:
-        n = batch.num_rows
-        change = _change(batch)
-        starts = np.flatnonzero(change)
-        counts = np.diff(np.append(starts, n))
-        idx = pa.array(starts, type=pa.int64())
-        return pa.RecordBatch.from_arrays(
-            [
-                pc.take(batch.column("term"), idx),
-                pc.take(batch.column("doc_int"), idx),
-                pa.array(counts.astype(np.int32)),
-                pc.take(batch.column("doc_length"), idx),
-                pc.take(batch.column("bucket"), idx),
-            ],
-            names=["term", "doc_int", "tf", "doc_length", "bucket"],
-        )
-
-    def fn(batches):
-        pending: pa.RecordBatch | None = None
-        for batch in batches:
-            if pending is not None:
-                batch = _concat(pending, batch)
-                pending = None
-            n = batch.num_rows
-            if n == 0:
-                continue
-            last_start = int(np.flatnonzero(_change(batch))[-1])
-            head, pending = batch.slice(0, last_start), batch.slice(last_start)
-            if head.num_rows:
-                yield _agg(head)
-        if pending is not None and pending.num_rows:
-            yield _agg(pending)
-
-    return fn
-
-
 POSTINGS_SCHEMA = "term string, doc_int long, tf int, doc_length int"
 POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", positions array<int>"
-
-# The exact Unicode White_Space table — what Java's (?U)\s (tokens_col)
-# and Go's unicode.IsSpace match. Used by the fused kernel's slow path.
-_WHITE_SPACE_RE = (
-    "[\t-\r \x85\xa0  -     　]+"
-)
 
 
 def _make_tokenize_tf_arrow_fn(with_positions: bool = False):
@@ -376,39 +140,28 @@ def _make_tokenize_tf_arrow_fn(with_positions: bool = False):
     ``with_positions`` additionally emits the sorted in-document token
     positions per posting (the reference posting contract,
     /root/reference/internal/ranking/types.go:92-96) as an
-    ``array<int>`` — replacing the posexplode + collect_list +
-    sort_array plan, whose per-token rows and per-group list buffers
-    are strictly heavier than the TF-only aggregation this kernel
-    already beats. Positions index into the empties-FILTERED token
+    ``array<int>``. Positions index into the empties-FILTERED token
     array (identical to ``posexplode(tokens_col(text))``), and arrive
     pre-sorted because the stable argsort preserves in-document token
     order within each (doc, term) group.
 
-    Why this can win where ``_make_tf_agg_arrow_fn`` measured 3-4x worse:
-    that counterfactual round-tripped every TOKEN through Arrow (~140M
-    string rows in both directions) just to fuse the agg into the write
-    shuffle. Here the Arrow transfer is |docs| rows in and |postings|
-    (already-aggregated) rows out, and the grouping exploits the fact
-    that a document's tokens are CONTIGUOUS: per-batch dictionary-encode
-    (a C-speed hash over at most the batch's own vocabulary, which stays
-    cache-resident) plus one ``np.unique`` over a combined
-    ``(row, code)`` int64 key replaces Catalyst's global hash aggregate
-    over tens of millions of near-unique (term, doc) groups — the stage
-    that measured 0.44-0.56 scaling efficiency at 2->8 cores precisely
-    because that global table misses DRAM on every probe.
+    The Arrow transfer is |docs| rows in and |postings| (already
+    aggregated) rows out, and the grouping exploits the fact that a
+    document's tokens are CONTIGUOUS: per-batch dictionary-encode (a
+    C-speed hash over at most the batch's own vocabulary, which stays
+    cache-resident) plus one stable argsort over a combined
+    ``(row, code)`` int64 key replaces a global hash aggregate over tens
+    of millions of near-unique (term, doc) groups, which misses DRAM on
+    every probe.
 
     Tokenizer parity: ``pc.utf8_split_whitespace`` matches the Catalyst
     tokenizer (``tokens_col``) on the whole Unicode White_Space table
     EXCEPT ``\\x1c``-``\\x1f`` (file/group/record/unit separators —
     Arrow-whitespace but NOT White_Space). A batch containing any such
-    byte re-splits through the explicit White_Space regex instead.
+    byte re-splits through ``functions.tokenize.split_tokens`` instead.
     Pinned by tests/test_index_build.py::test_fused_kernel_parity."""
-    import re
-
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    ws_re = re.compile(_WHITE_SPACE_RE)
 
     def fn(batches):
         for batch in batches:
@@ -419,10 +172,7 @@ def _make_tokenize_tf_arrow_fn(with_positions: bool = False):
                 pc.match_substring_regex(text, "[\\x1c-\\x1f]")
             ).as_py():
                 toks = pa.array(
-                    [
-                        [t for t in ws_re.split(s) if t]
-                        for s in text.to_pylist()
-                    ],
+                    [split_tokens(s) for s in text.to_pylist()],
                     type=pa.list_(pa.string()),
                 )
             else:
@@ -488,16 +238,50 @@ def _make_tokenize_tf_arrow_fn(with_positions: bool = False):
     return fn
 
 
-def with_range_routing(
-    post: DataFrame, range_rows: int, tail_df_threshold: int | None
+def tf_postings(docs: DataFrame, with_positions: bool = False) -> DataFrame:
+    """Aggregated postings (term, doc_int, tf, doc_length[, positions])
+    from (doc_int, doc_length, text) rows through the fused kernel — the
+    one postings plan, shared by build stage 2 and the incremental
+    append (streaming/incremental.py)."""
+    return docs.select("doc_int", "doc_length", "text").mapInArrow(
+        _make_tokenize_tf_arrow_fn(with_positions),
+        POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
+    )
+
+
+def bm25_factor(avgdl: float) -> Column:
+    """The per-posting BM25 tf/length factor the blocks store
+    (index/codec.py): (k1+1)*tf / (tf + k1*(1-b+b*dl/avgdl))."""
+    tfd = F.col("tf").cast("double")
+    dl = F.col("doc_length").cast("double")
+    return (tfd * F.lit(K1 + 1.0)) / (
+        tfd + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (dl / F.lit(avgdl)))
+    )
+
+
+def default_range_rows(n_docs: int, block_size: int) -> int:
+    """Default doc-range salt width: ~corpus/128 docs, so a hot term's
+    postings split into ~128 doc-contiguous encode groups (the salt MUST
+    engage for the blocks stage to scale with executors), and never
+    narrower than two blocks."""
+    return max(block_size * 2, math.ceil(max(n_docs, 1) / 128))
+
+
+def route_postings(
+    post: DataFrame,
+    avgdl: float,
+    range_rows: int,
+    tail_df_threshold: int | None,
 ) -> DataFrame:
-    """Attach the blocks-stage grouping key ``range_id``: order-preserving
+    """Score postings under the normalizer ``avgdl`` (``factor``) and
+    attach the encode grouping key ``range_id``: order-preserving
     doc-range salt for head terms, corpus-global collapse (range_id = -1)
-    for tail terms (df <= tail_df_threshold). SHARED by the batch blocks
-    stage and the incremental encoder (streaming/incremental.py) so
-    compaction and delta segments apply the same layout policy as a
-    from-scratch build — without this, the first compaction would silently
-    re-fragment zipf-tail terms into singleton blocks."""
+    for tail terms (df <= tail_df_threshold). Every full or delta encode
+    routes through here, so compaction and delta segments apply the same
+    layout policy as a from-scratch build — without this, the first
+    compaction would silently re-fragment zipf-tail terms into singleton
+    blocks."""
+    post = post.withColumn("factor", bm25_factor(avgdl))
     if not tail_df_threshold or tail_df_threshold <= 0:
         # tail salt disabled: no df pre-pass, pure doc-range salt
         return post.withColumn(
@@ -547,6 +331,97 @@ def with_range_routing(
     )
 
 
+def encode_blocks(
+    rows: DataFrame,
+    block_size: int,
+    range_rows: int,
+    n_buckets: int,
+    block_id_base: int = 0,
+    n_postings: int = 0,
+) -> DataFrame:
+    """The block encoder: (term, range_id, doc_int, tf, factor) rows, with
+    (term, range_id, doc_int) unique, in; BLOCK_SCHEMA rows plus ``bucket``
+    out. Build stage 3, full and delta compaction, minor compaction, merge
+    and prune all encode through here, so every index writer produces the
+    same block layout for the same rows.
+
+    The encode shuffle is sized by DATA, not cores: ``n_postings`` (when
+    the caller knows it) bounds rows per task at ~2M, floored at two waves
+    per core for small inputs and capped at 16x parallelism so a
+    1000-executor cluster does not shuffle into millions of slivers. (The
+    old cores*2 rule gave 8 cores only 16 partitions, so any skew in a
+    wave became a straggler tail: 41.7 s vs 35.1 s at 32 partitions on a
+    64M-posting input.)"""
+    par = rows.sparkSession.sparkContext.defaultParallelism
+    npart = min(
+        max(math.ceil(max(n_postings, 1) / 2_000_000), par * 2, 8), par * 16
+    )
+    enc = _make_encode_arrow_fn(
+        block_size, range_rows // block_size + 1, block_id_base
+    )
+    return (
+        rows.select("term", "range_id", "doc_int", "tf", "factor")
+        .repartition(npart, "term", "range_id")
+        .sortWithinPartitions("term", "range_id", "doc_int")
+        .mapInArrow(enc, schema=BLOCK_SCHEMA)
+        .withColumn("bucket", term_bucket("term", n_buckets))
+    )
+
+
+def terms_from_blocks(cat: IndexCatalog, n_buckets: int) -> DataFrame:
+    """Per-term stats from block METADATA (df = sum of block posting
+    counts, factor bounds = extrema over blocks, idf from corpus_stats) —
+    column pruning keeps the encoded binary columns out of the scan, so
+    this is a metadata aggregation, not a decode. Build stage 4 and every
+    re-encode write their terms table from this."""
+    return (
+        cat.blocks()
+        .groupBy("term")
+        .agg(
+            F.sum("n_postings").alias("df"),
+            F.max("max_factor").alias("max_factor"),
+            F.min("min_factor").alias("min_factor"),
+            F.count(F.lit(1)).cast("int").alias("n_blocks"),
+            F.max((F.col("range_id") == -1).cast("int")).alias("has_tail"),
+        )
+        .crossJoin(F.broadcast(cat.corpus_stats()))
+        .select(
+            "term",
+            "df",
+            F.log(
+                F.col("doc_count").cast("double")
+                / (F.col("df") + F.lit(1)).cast("double")
+            ).alias("idf"),
+            "max_factor",
+            "min_factor",
+            "n_blocks",
+            "has_tail",
+            term_bucket("term", n_buckets).alias("bucket"),
+        )
+    )
+
+
+_ENCODE_SESSION: SparkSession | None = None
+
+
+def _encode_session(spark: SparkSession) -> SparkSession:
+    """Clone of ``spark`` (shared SparkContext, isolated SQLConf) with
+    2^19-row Arrow batches, created once per SparkContext. Larger batches
+    amortize the encoder's per-batch boundary scan and pending-group
+    concat (the 10k default gives ~75 batches per task), and scoping the
+    override to the clone means a concurrent job on the caller's session
+    — e.g. a streaming incremental encode in another thread — keeps the
+    default Arrow batch size (pinned by
+    test_streaming_incremental.py::test_build_batch_size_isolated)."""
+    global _ENCODE_SESSION
+    iso = _ENCODE_SESSION
+    if iso is None or iso.sparkContext is not spark.sparkContext:
+        iso = spark.newSession()
+        iso.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(1 << 19))
+        _ENCODE_SESSION = iso
+    return iso
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -557,45 +432,27 @@ def build_index(
     resume: bool = True,
     with_positions: bool = False,
     tail_df_threshold: int | None = None,
-    term_keys: str = "auto",
-    hashed_vocab_threshold: int = 10_000,
 ) -> IndexCatalog:
     """Run (or resume) the full build. Returns the catalog over ``out_dir``.
 
     ``range_rows`` (the doc-range salt width for stage 3) defaults to
-    ~corpus/128 so a hot term's postings split into ~128 doc-contiguous
-    encode groups — the salt MUST engage for the blocks stage to scale
-    with executors (a single range degenerates to |vocab|-way
-    parallelism). It is persisted in the manifest and reused on resume so
-    a resumed build produces byte-identical block layout. Trade-off
-    documented in §4: with a zipf vocabulary, global doc-ranges fragment
-    the long tail (a df=10 term may split into 10 single-posting blocks);
-    ``tail_df_threshold`` (default ``block_size``) is the adaptive-salt
-    cutoff: a term with df <= threshold skips doc-range salting entirely
-    and encodes its postings as ONE corpus-global group (range_id = -1) —
-    without this, global doc-ranges fragment the zipf tail into
-    single-posting blocks (a df=10 term split across 10 ranges). Head
-    terms keep the order-preserving range salt. The WAND path scores
-    tail blocks in a dedicated per-query shard and sums partial scores,
-    with tail-aware slack keeping ranged-shard pruning rank-safe
-    (operators/wand.py).
+    ``default_range_rows`` (~corpus/128). It is persisted in the manifest
+    and reused on resume so a resumed build produces byte-identical block
+    layout. Trade-off documented in §4: with a zipf vocabulary, global
+    doc-ranges fragment the long tail (a df=10 term may split into 10
+    single-posting blocks); ``tail_df_threshold`` (default
+    ``block_size``) is the adaptive-salt cutoff: a term with
+    df <= threshold skips doc-range salting entirely and encodes its
+    postings as ONE corpus-global group (range_id = -1). Head terms keep
+    the order-preserving range salt. The WAND path scores tail blocks in
+    a dedicated per-query shard and sums partial scores, with tail-aware
+    slack keeping ranged-shard pruning rank-safe (operators/wand.py).
 
-    ``term_keys`` picks the plan for the postings TF aggregation:
-    ``"string"`` (explode + groupBy raw term strings), ``"hashed"``
-    (explode + groupBy xxhash64(term) int64 keys, dictionary-restore
-    strings after), ``"fused"`` (mapInArrow tokenize+segmented-count
-    kernel — no explode, no corpus-wide hash aggregate; with positions
-    it also emits the per-posting position arrays in the same pass),
-    ``"auto"`` (default: fused — the measured-fastest plan for both
-    build shapes), or ``"auto-agg"`` (the explode+groupBy family's
-    selector: sample-estimate the vocabulary, hashed above
-    ``hashed_vocab_threshold`` distinct terms — kept for A/Bs and as
-    the documented fallback family). Output postings are identical
-    under every plan (parity-tested); a detected 64-bit hash collision
-    fails the hashed plan over to the string plan."""
+    ``with_positions`` adds the per-posting token positions to the
+    postings table (same fused kernel, same pass)."""
     # degenerate-input guard: a source read as a handful of partitions
     # (one small file, a broadcast-built frame) would serialize the
-    # tokenize/explode map chains onto those few cores
+    # tokenize map chains onto those few cores
     min_part = spark.sparkContext.defaultParallelism
     if transcripts.rdd.getNumPartitions() < min_part:
         transcripts = transcripts.repartition(min_part * 2)
@@ -614,6 +471,13 @@ def build_index(
         "tail_df_threshold": tail_df_threshold,
     }
     cat.write_manifest(manifest)
+    # same write-parallelism rule for postings and blocks: co-locate
+    # buckets, but do NOT cap the write at n_buckets tasks — sub-split each
+    # bucket by a stripe so the write uses ~cluster parallelism while the
+    # file count stays bounded at n_buckets x files_per_bucket
+    files_per_bucket = max(
+        1, (spark.sparkContext.defaultParallelism * 2) // n_buckets
+    )
 
     def run_stage(name: str, fn):
         if resume and cat.stage_complete(name):
@@ -658,157 +522,25 @@ def build_index(
 
     if range_rows is None:
         n_docs = int(cat.read_manifest()["stages"]["doc_meta"]["rows"] or 0)
-        range_rows = max(block_size * 2, math.ceil(max(n_docs, 1) / 128))
+        range_rows = default_range_rows(n_docs, block_size)
         manifest = cat.read_manifest()
         manifest["config"]["range_rows"] = range_rows
         cat.write_manifest(manifest)
 
     # ---- stage 2: postings --------------------------------------------------
     def stage_postings():
-        # attach (doc_int, doc_length) BEFORE the explode: the join moves
-        # 1 row per doc instead of 1 per token, and every later shuffle
-        # keys on int64 (term hash, doc_int) rather than the doc_id string
+        # attach (doc_int, doc_length) BEFORE tokenizing: the join moves
+        # 1 row per doc instead of 1 per posting, and the write shuffle
+        # keys on (bucket, doc_int) rather than the doc_id string. The
+        # reference posting contract carries token positions
+        # (documentIndex.Positions, types.go:92-96); the ranking math never
+        # reads them, so they are opt-in — at 10^12 turns the positions
+        # arrays dominate index storage
         meta = cat.doc_meta().select("doc_id", "doc_int", "doc_length")
-        joined = with_doc_identity(transcripts).select("doc_id", "text").join(meta, "doc_id")
-        if with_positions:
-            # reference posting contract carries token positions
-            # (documentIndex.Positions, types.go:92-96); the ranking math
-            # never reads them, so they are opt-in — at 10^12 turns the
-            # positions arrays dominate index storage
-            toks = joined.select(
-                "doc_int", "doc_length",
-                F.posexplode(tokens_col("text")).alias("pos", "term"),
-            )
-            aggs = [
-                F.count(F.lit(1)).cast("int").alias("tf"),
-                F.max("doc_length").alias("doc_length"),
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-            ]
-            extra = ["positions"]
-        else:
-            # A fused single-shuffle variant (TF agg riding the write-layout
-            # exchange via sort + streaming Arrow run-length agg,
-            # _make_tf_agg_arrow_fn) was built and measured 3-4x SLOWER at
-            # 8 cores on the 76M-token zipf corpus: the Arrow round-trip of
-            # ~140M rows (tokens in, postings out, strings both ways)
-            # dwarfs the exchange it saves, while Catalyst's hash agg stays
-            # JVM-side in whole-stage codegen even when zipf uniqueness
-            # makes the partial step useless. Kept as the documented
-            # counterfactual, exercised by tests for correctness parity.
-            toks = joined.select(
-                "doc_int", "doc_length", F.explode(tokens_col("text")).alias("term")
-            )
-            aggs = [
-                F.count(F.lit(1)).cast("int").alias("tf"),
-                F.max("doc_length").alias("doc_length"),  # functional dep of doc_int
-            ]
-            extra = []
-
-        # key-plan choice for the corpus-scale TF aggregation. With a
-        # realistic (zipf, ~200k-term) vocabulary this hash agg holds tens
-        # of millions of near-unique groups and is DRAM-random-access
-        # bound; string keys make every probe chase a pointer and every
-        # shuffle row carry the term bytes twice. The hashed plan keys the
-        # agg on xxhash64(term) (8-byte fixed-width keys, term strings
-        # dropped before the shuffle) and restores strings afterwards via
-        # a vocab-sized dictionary join — measured ~2x faster under DRAM
-        # pressure, ~15% slower on cache-resident (tiny) vocabularies, and
-        # strictly fewer shuffle bytes on a real cluster. "auto" samples
-        # ~200k docs and picks hashed above ``hashed_vocab_threshold``.
-        plan = term_keys
-        est_vocab = None
-        if plan == "auto":
-            # fused is the measured default for BOTH build shapes
-            # (tools/ab_postings.py, zipf corpus, 8 cores, min-of-rounds):
-            # TF-only 23.6s vs string 60.4s / hashed 80.7s; with
-            # positions 30.6s vs string 159.3s / hashed 124.9s. And —
-            # unlike the agg plans — stable across 6x memcpy window
-            # swings: the per-batch dictionary hash stays cache-resident,
-            # so the stage is no longer DRAM-random-access bound
-            plan = "fused"
-        if plan == "auto-agg":
-            # decision-bound sampling: we only need a LOWER bound on the
-            # vocabulary vs the threshold, not a good estimate — 30k docs
-            # of a realistic corpus already surface far more than 10k
-            # distinct terms, so the probe stays ~1% of corpus scan cost
-            n_docs = int(cat.read_manifest()["stages"]["doc_meta"]["rows"] or 0)
-            frac = min(1.0, 30_000 / max(n_docs, 1))
-            sample = joined if frac >= 1.0 else joined.sample(fraction=frac, seed=7)
-            est_vocab = int(
-                sample.select(F.explode(tokens_col("text")).alias("term"))
-                .agg(F.approx_count_distinct("term").alias("v"))
-                .first()["v"]
-            )
-            plan = "hashed" if est_vocab > hashed_vocab_threshold else "string"
-
-        vocab = None
-        if plan == "fused":
-            # fused tokenize+TF kernel (_make_tokenize_tf_arrow_fn): no
-            # explode, no corpus-wide hash aggregate — per-batch segmented
-            # counting in Arrow/numpy, then only the write-layout exchange.
-            # With positions the same kernel also replaces the
-            # posexplode + collect_list + sort_array plan.
-            tf = (
-                joined.select("doc_int", "doc_length", "text")
-                .mapInArrow(
-                    _make_tokenize_tf_arrow_fn(with_positions),
-                    POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
-                )
-                .withColumn("bucket", term_bucket("term", n_buckets))
-            )
-        if plan == "hashed":
-            keyed = toks.withColumn("tkey", F.xxhash64("term"))
-            tf_h = keyed.groupBy("tkey", "doc_int").agg(*aggs)
-            # the dictionary pass re-scans the corpus, but its map-side
-            # partial agg collapses each partition to <= |vocab| rows, so
-            # both its hash map (vocab-sized, cache-resident) and its
-            # shuffle (~vocab x partitions rows) are trivial next to the
-            # postings agg it un-strings
-            vocab = keyed.select("tkey", "term").distinct().persist()
-            # one job: materialize the cache AND get size + collision
-            # evidence together (count < countDistinct(tkey) iff two
-            # terms share a 64-bit hash)
-            vstats = vocab.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("tkey").alias("k"),
-            ).first()
-            vcnt, kcnt = vstats["n"], vstats["k"]
-            if kcnt != vcnt:
-                # 64-bit collision (p ~ |vocab|^2 / 2^65; real only near
-                # 10^9-term vocabularies): merged TF rows would be silently
-                # wrong, so fail over to the exact string-keyed plan
-                vocab.unpersist()
-                vocab = None
-                plan = "string-collision-fallback"
-            else:
-                # restore term strings; bucket comes straight from tkey
-                # (term_bucket IS pmod(xxhash64(term), n)) so the corpus
-                # never re-hashes 10^8 strings. Broadcast the dictionary
-                # while it fits (5M terms ~ a few hundred MB); beyond that
-                # a shuffle join on the 8-byte key is still the cheap side.
-                dim = F.broadcast(vocab) if vcnt <= 5_000_000 else vocab
-                tf = (
-                    tf_h.withColumn(
-                        "bucket",
-                        F.pmod(F.col("tkey"), F.lit(n_buckets)).cast("int"),
-                    )
-                    .join(dim, "tkey")
-                    .drop("tkey")
-                )
-        if plan not in ("hashed", "fused"):
-            tf = toks.groupBy("term", "doc_int").agg(*aggs).withColumn(
-                "bucket", term_bucket("term", n_buckets)
-            )
-
-        # co-locate buckets for the write, but do NOT cap write
-        # parallelism at n_buckets tasks: sub-split each bucket by a
-        # doc_int stripe so the write uses ~cluster parallelism while
-        # file count stays bounded at n_buckets x files_per_bucket
-        files_per_bucket = max(
-            1, (spark.sparkContext.defaultParallelism * 2) // n_buckets
-        )
+        docs = with_doc_identity(transcripts).select("doc_id", "text").join(meta, "doc_id")
         post = (
-            tf.select("term", "doc_int", "tf", "doc_length", *extra, "bucket")
+            tf_postings(docs, with_positions)
+            .withColumn("bucket", term_bucket("term", n_buckets))
             .repartition(
                 n_buckets * files_per_bucket,
                 "bucket",
@@ -816,76 +548,26 @@ def build_index(
             )
         )
         out, n = cat.write_counted(post, "postings", partition_by=["bucket"])
-        if vocab is not None:
-            vocab.unpersist()
-        metrics = {"postings": n, "term_key_plan": plan}
-        if est_vocab is not None:
-            metrics["est_vocab"] = est_vocab
-        return out, n, metrics
+        return out, n, {"postings": n}
 
     run_stage("postings", stage_postings)
 
     # ---- stage 3: blocks ----------------------------------------------------
     def stage_blocks():
         _, avgdl = cat.scalar_stats()
-        # Run the encode under a CLONED session (shared SparkContext,
-        # isolated SQLConf): larger Arrow batches amortize the per-batch
-        # boundary scan and pending-group concat in the encoder (default
-        # 10k rows => ~75 batches per task here), and scoping the override
-        # to the clone means a concurrent job on the build's own session —
-        # e.g. a streaming incremental encode in another thread — keeps the
-        # default Arrow batch size (pinned by
-        # test_streaming_incremental.py::test_build_batch_size_isolated).
-        iso = spark.newSession()
-        iso.conf.set(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(1 << 19)
-        )
-        post = iso.read.parquet(cat.path("postings"))
-        tfd = F.col("tf").cast("double")
-        dl = F.col("doc_length").cast("double")
-        factor = (tfd * F.lit(K1 + 1.0)) / (
-            tfd + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (dl / F.lit(avgdl)))
-        )
-        blocks_per_range = range_rows // block_size + 1
-        enc = _make_encode_arrow_fn(block_size, blocks_per_range)
         # adaptive salt: head terms (df > threshold) get doc-range groups;
         # tail terms collapse to ONE corpus-global group (range_id = -1),
         # so a df=10 term yields one 10-posting block instead of up to 10
-        # singleton blocks. Routing policy shared with the incremental
-        # encoder — see with_range_routing above.
-        ranged = with_range_routing(
-            post.withColumn("factor", factor), range_rows, tail_df_threshold
-        )
-        # Encode-shuffle sizing is DATA-driven, not core-driven: the old
-        # cores*2 rule gave 8 cores only 16 partitions (2 task waves), so
-        # any skew in a wave became a straggler tail — measured 41.7s vs
-        # 35.1s/32.8s at 32/128 partitions on the same 64M-posting input
-        # (2026-08-21 A/B; the 2-core leg also improved 101.1s -> 95.3s).
-        # Bound rows/task (~TARGET_ENCODE_ROWS * 2/3 keeps the encoder's
-        # in-task buffer at the same envelope), floor at 2 waves per core
-        # for small inputs, cap at 16x parallelism so a 1000-executor
-        # cluster doesn't shuffle into millions of slivers.
-        par = spark.sparkContext.defaultParallelism
-        n_post = int(
-            cat.read_manifest()["stages"]["postings"]["rows"] or 0
-        )
-        npart = min(
-            max(math.ceil(max(n_post, 1) / 2_000_000), par * 2, 8),
-            par * 16,
-        )
-        blocks = (
-            ranged.select("term", "range_id", "doc_int", "tf", "factor")
-            .repartition(npart, "term", "range_id")
-            .sortWithinPartitions("term", "range_id", "doc_int")
-            .mapInArrow(enc, schema=BLOCK_SCHEMA)
-            .withColumn("bucket", term_bucket("term", n_buckets))
-            # same write-parallelism rule as stage 2: don't collapse the
-            # write to n_buckets tasks on a bigger cluster
-            .repartition(
-                n_buckets * max(1, (spark.sparkContext.defaultParallelism * 2) // n_buckets),
-                "bucket",
-                F.pmod(F.col("block_id"), F.lit(max(1, (spark.sparkContext.defaultParallelism * 2) // n_buckets))),
-            )
+        # singleton blocks (route_postings)
+        post = _encode_session(spark).read.parquet(cat.path("postings"))
+        n_post = int(cat.read_manifest()["stages"]["postings"]["rows"] or 0)
+        blocks = encode_blocks(
+            route_postings(post, avgdl, range_rows, tail_df_threshold),
+            block_size, range_rows, n_buckets, n_postings=n_post,
+        ).repartition(
+            n_buckets * files_per_bucket,
+            "bucket",
+            F.pmod(F.col("block_id"), F.lit(files_per_bucket)),
         )
         out, n = cat.write_counted(blocks, "blocks", partition_by=["bucket"])
         return out, n, {"blocks": n}
@@ -894,33 +576,7 @@ def build_index(
 
     # ---- stage 4: terms -----------------------------------------------------
     def stage_terms():
-        stats = cat.corpus_stats()
-        terms = (
-            cat.blocks()
-            .groupBy("term")
-            .agg(
-                F.sum("n_postings").alias("df"),
-                F.max("max_factor").alias("max_factor"),
-                F.min("min_factor").alias("min_factor"),
-                F.count(F.lit(1)).cast("int").alias("n_blocks"),
-                F.max((F.col("range_id") == -1).cast("int")).alias("has_tail"),
-            )
-            .crossJoin(F.broadcast(stats))
-            .select(
-                "term",
-                "df",
-                F.log(
-                    F.col("doc_count").cast("double")
-                    / (F.col("df") + F.lit(1)).cast("double")
-                ).alias("idf"),
-                "max_factor",
-                "min_factor",
-                "n_blocks",
-                "has_tail",
-                term_bucket("term", n_buckets).alias("bucket"),
-            )
-        )
-        out, n = cat.write_counted(terms, "terms")
+        out, n = cat.write_counted(terms_from_blocks(cat, n_buckets), "terms")
         return out, n, {"terms": n}
 
     run_stage("terms", stage_terms)

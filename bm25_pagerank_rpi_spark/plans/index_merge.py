@@ -27,7 +27,7 @@ Semantics follow the Lucene merge model:
 
 Scale shape: doc_meta and corpus_stats are metadata-sized; the postings
 union is a scan plus the ONE (term, range_id) shuffle every encode
-already pays (streaming/incremental._encode_postings). Nothing collects
+already pays (index_build.encode_blocks). Nothing collects
 to the driver. A 1000-executor merge of two 50-TB shards is the same
 plan at 10^6 x the rows, and the doc_int re-base means shard k's scan
 is embarrassingly parallel with shard j's.
@@ -35,7 +35,6 @@ is embarrassingly parallel with shard j's.
 
 from __future__ import annotations
 
-import math
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +42,12 @@ from pyspark.sql import functions as F
 
 from ..index import codec
 from ..sources.catalog import IndexCatalog, term_bucket
+from .index_build import (
+    default_range_rows,
+    encode_blocks,
+    route_postings,
+    terms_from_blocks,
+)
 
 
 def _live_postings(cat: IndexCatalog) -> DataFrame:
@@ -146,7 +151,7 @@ def merge_catalogs(
 
     # -- blocks + terms: re-encode under the merged normalizer ------------
     # same default salt width as a from-scratch build of this corpus size
-    range_rows = max(block_size * 2, math.ceil(max(n_docs, 1) / 128))
+    range_rows = default_range_rows(n_docs, block_size)
     m = out.read_manifest()
     m["config"] = {
         "n_buckets": n_buckets,
@@ -156,16 +161,14 @@ def merge_catalogs(
     }
     out.write_manifest(m)
 
-    from ..streaming.incremental import _encode_postings, _refresh_terms
-
-    blocks = _encode_postings(
-        out, out.postings(), avgdl, block_size, range_rows, n_buckets,
-        tail_df_threshold=tail_df_threshold,
+    blocks = encode_blocks(
+        route_postings(out.postings(), avgdl, range_rows, tail_df_threshold),
+        block_size, range_rows, n_buckets,
     ).repartition(n_buckets, "bucket")
     blocks.write.mode("overwrite").partitionBy("bucket").parquet(
         out.path("blocks")
     )
-    _refresh_terms(out, n_buckets)
+    out.write(terms_from_blocks(out, n_buckets), "terms")
 
     m = out.read_manifest()
     m["merged_from"] = fingerprint

@@ -24,7 +24,7 @@ partition of the rows yields a superset of the global top-m), then the
 global top-m ranks over at most ``m * n_salt`` rows per term. No term,
 however hot, ever ranks its full posting list in one window partition.
 The re-encode is the same single (term, range_id) shuffle every encode
-pays (streaming/incremental._encode_postings). The reference serves
+pays (index_build.encode_blocks). The reference serves
 posting fetches through one index contract
 (/root/reference/internal/ranking/data_getters.go:17-40); a pruned
 catalog serves that same contract over the surviving postings.
@@ -32,15 +32,20 @@ catalog serves that same contract over the surviving postings.
 
 from __future__ import annotations
 
-import math
 import time
 
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import B, K1
 from ..index import codec
 from ..sources.catalog import IndexCatalog, term_bucket
+from .index_build import (
+    bm25_factor,
+    default_range_rows,
+    encode_blocks,
+    route_postings,
+    terms_from_blocks,
+)
 
 
 def prune_index(
@@ -78,18 +83,13 @@ def prune_index(
     if cat.n_deletes():
         post = post.join(F.broadcast(cat.deletes()), "doc_int", "left_anti")
 
-    tfd = F.col("tf").cast("double")
-    dl = F.col("doc_length").cast("double")
-    factor = (tfd * F.lit(K1 + 1.0)) / (
-        tfd + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (dl / F.lit(avgdl)))
-    )
     order = [F.desc("factor"), F.asc("doc_int")]
     # phase 1: local top-m per (term, deterministic salt) — bounded groups
     w1 = Window.partitionBy("term", "salt").orderBy(*order)
     # phase 2: global top-m over the <= m*n_salt survivors per term
     w2 = Window.partitionBy("term").orderBy(*order)
     kept = (
-        post.withColumn("factor", factor)
+        post.withColumn("factor", bm25_factor(avgdl))
         .withColumn("salt", F.pmod(F.col("doc_int"), F.lit(n_salt)))
         .withColumn("r1", F.row_number().over(w1))
         .filter(F.col("r1") <= keep_df)
@@ -102,7 +102,7 @@ def prune_index(
     )
     out.write(kept, "postings", partition_by=["bucket"])
 
-    range_rows = max(block_size * 2, math.ceil(max(n_docs, 1) / 128))
+    range_rows = default_range_rows(n_docs, block_size)
     m = out.read_manifest()
     m["config"] = {
         "n_buckets": n_buckets,
@@ -112,11 +112,9 @@ def prune_index(
     }
     out.write_manifest(m)
 
-    from ..streaming.incremental import _encode_postings
-
-    blocks = _encode_postings(
-        out, out.postings(), avgdl, block_size, range_rows, n_buckets,
-        tail_df_threshold=tail_df_threshold,
+    blocks = encode_blocks(
+        route_postings(out.postings(), avgdl, range_rows, tail_df_threshold),
+        block_size, range_rows, n_buckets,
     ).repartition(n_buckets, "bucket")
     blocks.write.mode("overwrite").partitionBy("bucket").parquet(
         out.path("blocks")
@@ -125,19 +123,13 @@ def prune_index(
     # terms: FROZEN df/idf from the source catalog, survivor factor
     # extrema/block counts from the new blocks — an inner join, so terms
     # whose postings were all tombstone-purged drop out with their blocks
-    survivors = (
-        out.blocks()
-        .groupBy("term")
-        .agg(
-            F.max("max_factor").alias("max_factor"),
-            F.min("min_factor").alias("min_factor"),
-            F.count(F.lit(1)).cast("int").alias("n_blocks"),
-            F.max((F.col("range_id") == -1).cast("int")).alias("has_tail"),
-        )
+    survivors = terms_from_blocks(out, n_buckets)
+    terms = (
+        survivors.drop("df", "idf")
+        .join(cat.terms().select("term", "df", "idf"), "term")
+        .select(*survivors.columns)
     )
-    terms = cat.terms().select("term", "df", "idf").join(survivors, "term")
-    terms = terms.withColumn("bucket", term_bucket("term", n_buckets))
-    terms.write.mode("overwrite").parquet(out.path("terms"))
+    out.write(terms, "terms")
 
     m = out.read_manifest()
     m["pruned_from"] = [cat.root, keep_df]

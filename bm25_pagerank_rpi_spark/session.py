@@ -11,6 +11,28 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """A quarter of the host's (or the memory cgroup's) RAM, rounded to
+    whole GiB and clamped to 1-24g. A fixed 24g heap lets a long-lived
+    local JVM grow past the physical memory of a 16 GB host until the
+    kernel OOM-kills it; a quarter leaves room for the Python workers,
+    the JVM's off-heap memory and the page cache."""
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        for limit_file in (
+            "/sys/fs/cgroup/memory.max",  # cgroup v2
+            "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+        ):
+            try:
+                with open(limit_file) as f:
+                    limit = f.read().strip()
+            except OSError:
+                continue
+            if limit.isdigit():
+                total_bytes = min(total_bytes, int(limit))
+    return f"{min(24, max(1, round(total_bytes / 4 / (1 << 30))))}g"
+
+
 def get_spark(
     app_name: str = "bm25_pagerank_rpi_spark",
     cores: int | None = None,
@@ -45,7 +67,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         # sandbox: one shared virtio disk serializes shuffle I/O across all
         # "executors"; SPARK_GRAFT_LOCAL_DIR=/dev/shm/... stands in for
         # per-executor local disks during scaling measurements

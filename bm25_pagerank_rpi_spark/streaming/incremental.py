@@ -50,6 +50,13 @@ from pyspark.sql import functions as F
 
 from ..functions.ordinal import dense_ordinal
 from ..functions.tokenize import tokens_col
+from ..index import codec
+from ..plans.index_build import (
+    encode_blocks,
+    route_postings,
+    terms_from_blocks,
+    tf_postings,
+)
 from ..sources.catalog import IndexCatalog, term_bucket
 from ..sources.transcripts import TRANSCRIPT_SCHEMA, with_doc_identity
 
@@ -95,20 +102,14 @@ def append_segment(cat: IndexCatalog, batch: DataFrame, n_buckets: int = 32) -> 
     if n == 0:
         return 0
 
-    toks = t.select("doc_id", F.explode(tokens_col("text")).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).cast("int").alias("tf"))
-    post = (
-        tf.join(
-            cat.doc_meta()
-            .filter(F.col("doc_int") >= base)
-            .select("doc_id", "doc_int", "doc_length"),
-            "doc_id",
-        )
-        .select(
-            "term", "doc_int", "tf", "doc_length",
-            term_bucket("term", n_buckets).alias("bucket"),
-        )
+    # same fused tokenize+TF kernel as the batch build's postings stage
+    docs = t.select("doc_id", "text").join(
+        cat.doc_meta()
+        .filter(F.col("doc_int") >= base)
+        .select("doc_id", "doc_int", "doc_length"),
+        "doc_id",
     )
+    post = tf_postings(docs).withColumn("bucket", term_bucket("term", n_buckets))
     post.write.mode("append").partitionBy("bucket").parquet(cat.path("postings"))
 
     stats = cat.live_doc_meta().agg(
@@ -124,90 +125,7 @@ def append_segment(cat: IndexCatalog, batch: DataFrame, n_buckets: int = 32) -> 
     return n
 
 
-def _encode_postings(
-    cat: IndexCatalog,
-    post: DataFrame,
-    avgdl: float,
-    block_size: int,
-    range_rows: int,
-    n_buckets: int,
-    block_id_base: int = 0,
-    tail_df_threshold: int | None = None,
-) -> DataFrame:
-    """(term, range_id)-grouped block encode of a postings relation under a
-    FIXED normalizer — the shared kernel of compaction and delta append.
-    Applies the SAME head/tail range routing as the batch blocks stage
-    (``tail_df_threshold`` from the manifest), so a compacted or
-    incrementally-grown index keeps the batch build's layout policy:
-    zipf-tail terms stay collapsed in corpus-global blocks instead of
-    re-fragmenting into singletons. Tail routing of a DELTA encode is
-    decided on the delta's own df (most delta terms are tail-sized);
-    a term may therefore hold both ranged and tail blocks across
-    generations — the WAND path scores that mix exactly (has_tail +
-    partial-sum merge)."""
-    from .. import B, K1
-    from ..plans.index_build import (
-        BLOCK_SCHEMA,
-        _make_encode_arrow_fn,
-        with_range_routing,
-    )
-
-    tfd = F.col("tf").cast("double")
-    dl = F.col("doc_length").cast("double")
-    factor = (tfd * F.lit(K1 + 1.0)) / (
-        tfd + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * (dl / F.lit(avgdl)))
-    )
-    blocks_per_range = range_rows // block_size + 1
-    enc = _make_encode_arrow_fn(block_size, blocks_per_range, block_id_base)
-    ranged = with_range_routing(
-        post.withColumn("factor", factor), range_rows, tail_df_threshold
-    )
-    npart = max(cat.spark.sparkContext.defaultParallelism * 2, 8)
-    return (
-        ranged.select("term", "range_id", "doc_int", "tf", "factor")
-        .repartition(npart, "term", "range_id")
-        .sortWithinPartitions("term", "range_id", "doc_int")
-        .mapInArrow(enc, schema=BLOCK_SCHEMA)
-        .withColumn("bucket", term_bucket("term", n_buckets))
-    )
-
-
-def _refresh_terms(cat: IndexCatalog, n_buckets: int) -> None:
-    """Rebuild per-term stats from block METADATA (df = sum of block
-    posting counts, factor bounds = extrema over blocks) — column pruning
-    keeps the encoded binary columns out of the scan, so this is a
-    metadata aggregation, not a decode."""
-    stats = cat.corpus_stats()
-    terms = (
-        cat.blocks()
-        .groupBy("term")
-        .agg(
-            F.sum("n_postings").alias("df"),
-            F.max("max_factor").alias("max_factor"),
-            F.min("min_factor").alias("min_factor"),
-            F.count(F.lit(1)).cast("int").alias("n_blocks"),
-            F.max((F.col("range_id") == -1).cast("int")).alias("has_tail"),
-        )
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "term",
-            "df",
-            F.log(
-                F.col("doc_count").cast("double") / (F.col("df") + F.lit(1)).cast("double")
-            ).alias("idf"),
-            "max_factor",
-            "min_factor",
-            "n_blocks",
-            "has_tail",
-            term_bucket("term", n_buckets).alias("bucket"),
-        )
-    )
-    terms.write.mode("overwrite").parquet(cat.path("terms"))
-
-
 def _config(cat: IndexCatalog) -> tuple[int, int, int, int]:
-    from ..index import codec
-
     cfg = cat.read_manifest().get("config", {})
     n_buckets = int(cfg.get("n_buckets") or 32)
     block_size = int(cfg.get("block_size") or codec.DEFAULT_BLOCK_SIZE)
@@ -230,12 +148,12 @@ def compact(cat: IndexCatalog) -> None:
     purge_deletes(cat)
     n_buckets, block_size, range_rows, tail_df_threshold = _config(cat)
     _, avgdl = cat.scalar_stats()
-    blocks = _encode_postings(
-        cat, cat.postings(), avgdl, block_size, range_rows, n_buckets,
-        tail_df_threshold=tail_df_threshold,
+    blocks = encode_blocks(
+        route_postings(cat.postings(), avgdl, range_rows, tail_df_threshold),
+        block_size, range_rows, n_buckets,
     ).repartition(n_buckets, "bucket")
     blocks.write.mode("overwrite").partitionBy("bucket").parquet(cat.path("blocks"))
-    _refresh_terms(cat, n_buckets)
+    cat.write(terms_from_blocks(cat, n_buckets), "terms")
     m = cat.read_manifest()
     m["encode_avgdl"] = avgdl
     m["delta_gens"] = 0
@@ -248,19 +166,22 @@ def append_delta_blocks(cat: IndexCatalog, min_doc_int: int) -> None:
     appended this run) under the FROZEN normalizer and append them.
     The doc_int predicate pushes down to the postings scan, and because
     segment files hold disjoint doc_int ranges, parquet row-group stats
-    prune every pre-existing file — the encode cost is O(delta)."""
+    prune every pre-existing file — the encode cost is O(delta). Tail
+    routing is decided on the delta's own df (most delta terms are
+    tail-sized), so a term may hold both ranged and tail blocks across
+    generations — the WAND path scores that mix exactly (has_tail +
+    partial-sum merge)."""
     n_buckets, block_size, range_rows, tail_df_threshold = _config(cat)
     m = cat.read_manifest()
     avgdl = float(m["encode_avgdl"])
     gen = int(m.get("delta_gens", 0)) + 1
     post = cat.postings().filter(F.col("doc_int") >= min_doc_int)
-    blocks = _encode_postings(
-        cat, post, avgdl, block_size, range_rows, n_buckets,
-        block_id_base=gen * GEN_STRIDE,
-        tail_df_threshold=tail_df_threshold,
+    blocks = encode_blocks(
+        route_postings(post, avgdl, range_rows, tail_df_threshold),
+        block_size, range_rows, n_buckets, block_id_base=gen * GEN_STRIDE,
     )
     blocks.write.mode("append").partitionBy("bucket").parquet(cat.path("blocks"))
-    _refresh_terms(cat, n_buckets)
+    cat.write(terms_from_blocks(cat, n_buckets), "terms")
     m = cat.read_manifest()
     m["delta_gens"] = gen
     m.setdefault("encodes", []).append(
@@ -272,40 +193,40 @@ def append_delta_blocks(cat: IndexCatalog, min_doc_int: int) -> None:
 DEFAULT_MINOR_COMPACT_GENS = 8
 
 
-def _make_merge_fn(block_size: int, blocks_per_range: int):
-    """Group merger for minor compaction: decode a (term, range_id)
-    group's fragmented blocks, doc-sort, re-encode as densely packed
-    blocks in the base (gen-0) block_id namespace. The (doc, tf, factor)
-    triples pass through UNCHANGED — no re-scoring."""
+_DECODED_SCHEMA = "term string, range_id long, doc_int long, tf long, factor double"
+
+
+def _decode_blocks(batches):
+    """``mapInArrow`` decoder: block rows in, one (term, range_id, doc_int,
+    tf, factor) row per posting out — the encoder's input shape, with the
+    stored factor passed through unchanged."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    from ..index import codec
-
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, range_id = key
-        ds, ts, fs = [], [], []
-        for r in pdf.itertuples():
-            d, t, f = codec.decode_block(r)
-            ds.append(d)
-            ts.append(t)
-            fs.append(f)
-        d = np.concatenate(ds)
-        t = np.concatenate(ts)
-        f = np.concatenate(fs)
-        order = np.argsort(d, kind="stable")  # gens hold disjoint doc ranges
-        rows = []
-        for b in codec.blocks_for_term(
-            d[order], t[order], f[order], block_size=block_size,
-            first_block_id=int(range_id) * blocks_per_range,
-        ):
-            b["term"] = term
-            b["range_id"] = int(range_id)
-            b["n_postings"] = b.pop("count")
-            rows.append(b)
-        return pd.DataFrame(rows)
-
-    return fn
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        decoded = [
+            codec.decode_block({"docs_enc": d, "tfs_enc": t, "factors_enc": f})
+            for d, t, f in zip(
+                batch.column("docs_enc").to_pylist(),
+                batch.column("tfs_enc").to_pylist(),
+                batch.column("factors_enc").to_pylist(),
+            )
+        ]
+        owner = pa.array(
+            np.repeat(np.arange(batch.num_rows), [d.size for d, _, _ in decoded])
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("term").take(owner),
+                batch.column("range_id").take(owner),
+                pa.array(np.concatenate([d for d, _, _ in decoded])),
+                pa.array(np.concatenate([t for _, t, _ in decoded])),
+                pa.array(np.concatenate([f for _, _, f in decoded])),
+            ],
+            names=["term", "range_id", "doc_int", "tf", "factor"],
+        )
 
 
 def minor_compact(cat: IndexCatalog) -> int:
@@ -322,10 +243,7 @@ def minor_compact(cat: IndexCatalog) -> int:
     import os
     import shutil
 
-    from ..plans.index_build import BLOCK_SCHEMA
-
     n_buckets, block_size, range_rows, _ = _config(cat)
-    blocks_per_range = range_rows // block_size + 1
     blk = cat.blocks()
     frag_keys = (
         blk.groupBy("term", "range_id")
@@ -338,11 +256,13 @@ def minor_compact(cat: IndexCatalog) -> int:
         return 0
     frag = blk.join(frag_keys, ["term", "range_id"])
     keep = blk.join(frag_keys, ["term", "range_id"], "left_anti")
-    merged = (
-        frag.groupBy("term", "range_id")
-        .applyInPandas(_make_merge_fn(block_size, blocks_per_range), BLOCK_SCHEMA)
-        .withColumn("bucket", term_bucket("term", n_buckets))
-    )
+    # decode the fragments to posting rows and re-encode them through the
+    # build's encoder in the base (gen-0) block_id namespace; generations
+    # hold disjoint doc ranges, so (term, range_id, doc_int) stays unique
+    rows = frag.select(
+        "term", "range_id", "docs_enc", "tfs_enc", "factors_enc"
+    ).mapInArrow(_decode_blocks, _DECODED_SCHEMA)
+    merged = encode_blocks(rows, block_size, range_rows, n_buckets)
     out = keep.select(*merged.columns).unionByName(merged)
     tmp = cat.path("blocks") + "._compacting"
     out.repartition(n_buckets, "bucket").write.mode("overwrite").partitionBy(
@@ -351,7 +271,7 @@ def minor_compact(cat: IndexCatalog) -> int:
     final = cat.path("blocks")
     shutil.rmtree(final)
     os.rename(tmp, final)
-    _refresh_terms(cat, n_buckets)
+    cat.write(terms_from_blocks(cat, n_buckets), "terms")
     m = cat.read_manifest()
     m["delta_gens"] = 0
     m.setdefault("encodes", []).append({"type": "minor", "merged_groups": n_frag})

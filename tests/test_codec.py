@@ -113,22 +113,19 @@ def _sorted_run(rng, n, nterms, max_doc, tail_frac=0.3):
     ).reset_index(drop=True)
 
 
-def test_encode_sorted_run_matches_per_group_blocks():
-    """The vectorized whole-run encoder (one varint pass + reduceat bounds)
-    must be byte-identical to blocks_for_term applied per (term, range_id)
-    group — the blocks stage and incremental encoder rely on this."""
-    import pandas as pd
+_BLOCK_COLS = [
+    "term", "range_id", "block_id", "n_postings", "min_doc", "max_doc",
+    "max_factor", "min_factor", "docs_enc", "tfs_enc", "factors_enc",
+]
 
-    rng = np.random.default_rng(41)
-    pdf = _sorted_run(rng, 30_000, 700, 5_000)
-    bs, bpr, base = 16, 7, 2_000  # small blocks: multi-block groups common
+
+def _reference_blocks(pdf, bs, bpr, base):
+    """The reference encoding: ``blocks_for_term`` (one ``encode_block``
+    per block_size slice) applied to each (term, range_id) group."""
+    import pandas as pd
 
     terms = pdf["term"].to_numpy()
     rids = pdf["range_id"].to_numpy(dtype=np.int64)
-    docs = pdf["doc_int"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    facs = pdf["factor"].to_numpy(dtype=np.float64)
-
     change = np.empty(len(pdf), dtype=bool)
     change[0] = True
     change[1:] = (terms[1:] != terms[:-1]) | (rids[1:] != rids[:-1])
@@ -137,34 +134,57 @@ def test_encode_sorted_run_matches_per_group_blocks():
     rows = []
     for s, e in zip(starts, ends):
         for b in codec.blocks_for_term(
-            docs[s:e], tfs[s:e], facs[s:e], block_size=bs,
+            pdf["doc_int"].to_numpy(np.int64)[s:e],
+            pdf["tf"].to_numpy(np.int64)[s:e],
+            pdf["factor"].to_numpy(np.float64)[s:e],
+            block_size=bs,
             first_block_id=base + int(rids[s]) * bpr,
         ):
             b["term"] = terms[s]
             b["range_id"] = int(rids[s])
             b["n_postings"] = b.pop("count")
             rows.append(b)
-    old = pd.DataFrame(rows)
+    return pd.DataFrame(rows)[_BLOCK_COLS], len(starts)
 
-    new = pd.DataFrame(
-        codec.encode_sorted_run(
-            terms, rids, docs, tfs, facs,
-            block_size=bs, blocks_per_range=bpr, block_id_base=base,
-        )
-    )
-    cols = [
-        "term", "range_id", "block_id", "n_postings", "min_doc", "max_doc",
-        "max_factor", "min_factor", "docs_enc", "tfs_enc", "factors_enc",
-    ]
-    old = old[cols].sort_values(["term", "range_id", "block_id"]).reset_index(drop=True)
-    new = new[cols].sort_values(["term", "range_id", "block_id"]).reset_index(drop=True)
-    assert len(old) == len(new) and len(new) > len(starts)  # multi-block groups hit
-    for c in cols:
-        ov, nv = old[c].to_numpy(), new[c].to_numpy()
+
+def _encode_arrow(pdf, bs, bpr, base):
+    import pyarrow as pa
+
+    return codec.encode_sorted_run_arrow(
+        pa.array(list(pdf["term"]), type=pa.string()),
+        pdf["range_id"].to_numpy(np.int64),
+        pdf["doc_int"].to_numpy(np.int64),
+        pdf["tf"].to_numpy(np.int64),
+        pdf["factor"].to_numpy(np.float64),
+        block_size=bs, blocks_per_range=bpr, block_id_base=base,
+    ).to_pandas()
+
+
+def _assert_same_blocks(want, got):
+    key = ["term", "range_id", "block_id"]
+    want = want[_BLOCK_COLS].sort_values(key).reset_index(drop=True)
+    got = got[_BLOCK_COLS].sort_values(key).reset_index(drop=True)
+    assert len(want) == len(got)
+    for c in _BLOCK_COLS:
+        ov, nv = want[c].to_numpy(), got[c].to_numpy()
         if c in ("term", "docs_enc", "tfs_enc", "factors_enc"):
             assert all(a == b for a, b in zip(ov, nv)), c
         else:
             assert (ov == nv).all(), c
+
+
+def test_encode_sorted_run_matches_per_group_blocks():
+    """The vectorized whole-run encoder (one varint pass + reduceat bounds)
+    must be byte-identical to blocks_for_term applied per (term, range_id)
+    group — every index writer encodes through it."""
+    rng = np.random.default_rng(41)
+    pdf = _sorted_run(rng, 30_000, 700, 5_000)
+    bs, bpr, base = 16, 7, 2_000  # small blocks: multi-block groups common
+
+    want, n_groups = _reference_blocks(pdf, bs, bpr, base)
+    new = _encode_arrow(pdf, bs, bpr, base)
+    assert len(new) > n_groups  # multi-block groups hit
+    _assert_same_blocks(want, new)
     # decoded round-trip on a sample
     for i in [0, len(new) // 2, len(new) - 1]:
         d, t, f = codec.decode_block(new.iloc[i].to_dict())
@@ -173,70 +193,43 @@ def test_encode_sorted_run_matches_per_group_blocks():
 
 
 def test_encode_sorted_run_empty_and_single():
-    out = codec.encode_sorted_run(
-        np.empty(0, dtype=object), np.empty(0, dtype=np.int64),
-        np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64),
-        np.empty(0, dtype=np.float64),
-    )
-    assert len(out["term"]) == 0
-    out = codec.encode_sorted_run(
-        np.array(["a"], dtype=object), np.array([-1]), np.array([42]),
+    import pyarrow as pa
+
+    out = codec.encode_sorted_run_arrow(
+        pa.array(["a"], type=pa.string()), np.array([-1]), np.array([42]),
         np.array([3]), np.array([0.5]), block_size=4, blocks_per_range=2,
         block_id_base=10,
-    )
-    assert list(out["block_id"]) == [10 - 2] and list(out["min_doc"]) == [42]
+    ).to_pydict()
+    assert out["block_id"] == [10 - 2] and out["min_doc"] == [42]
     d, t, f = codec.decode_block({k: v[0] for k, v in out.items()})
     assert list(d) == [42] and list(t) == [3] and list(f) == [0.5]
 
 
 def test_encode_sorted_run_arrow_matches_pandas_run():
-    """The Arrow-native run encoder (mapInArrow seam) must be byte-identical
-    to encode_sorted_run — same blocks, same ids, same encoded bytes."""
-    import pandas as pd
+    """A second seeded run against the per-group reference, and an Arrow
+    SLICE (non-zero offset, as the encoder's batch-boundary buffering
+    produces) must encode identically to the equivalent copy."""
     import pyarrow as pa
 
     rng = np.random.default_rng(43)
     pdf = _sorted_run(rng, 30_000, 700, 5_000)
     bs, bpr, base = 16, 7, 2_000
 
+    want, _ = _reference_blocks(pdf, bs, bpr, base)
+    _assert_same_blocks(want, _encode_arrow(pdf, bs, bpr, base))
+
     terms = pdf["term"].to_numpy()
     rids = pdf["range_id"].to_numpy(dtype=np.int64)
     docs = pdf["doc_int"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)
     facs = pdf["factor"].to_numpy(dtype=np.float64)
-
-    old = pd.DataFrame(
-        codec.encode_sorted_run(
-            terms, rids, docs, tfs, facs,
-            block_size=bs, blocks_per_range=bpr, block_id_base=base,
-        )
-    )
-    batch = codec.encode_sorted_run_arrow(
-        pa.array(list(terms), type=pa.string()), rids, docs, tfs, facs,
-        block_size=bs, blocks_per_range=bpr, block_id_base=base,
-    )
-    new = batch.to_pandas()
-    assert list(new.columns) == list(old.columns)
-    assert len(new) == len(old)
-    for c in old.columns:
-        ov, nv = old[c].to_numpy(), new[c].to_numpy()
-        if c in ("term", "docs_enc", "tfs_enc", "factors_enc"):
-            assert all(a == b for a, b in zip(ov, nv)), c
-        else:
-            assert (ov == nv).all(), c
-    # an Arrow SLICE (non-zero offset, as the batch-boundary buffering
-    # produces) must encode identically to the equivalent copy
     full = pa.array(list(terms), type=pa.string())
     k = 1000
     sliced = codec.encode_sorted_run_arrow(
         full.slice(k), rids[k:], docs[k:], tfs[k:], facs[k:],
         block_size=bs, blocks_per_range=bpr, block_id_base=base,
     ).to_pandas()
-    direct = codec.encode_sorted_run_arrow(
-        pa.array(list(terms[k:]), type=pa.string()), rids[k:], docs[k:],
-        tfs[k:], facs[k:], block_size=bs, blocks_per_range=bpr,
-        block_id_base=base,
-    ).to_pandas()
+    direct = _encode_arrow(pdf.iloc[k:], bs, bpr, base)
     assert sliced.equals(direct)
 
 
@@ -251,58 +244,6 @@ def test_encode_sorted_run_arrow_empty():
         )
         is None
     )
-
-
-def test_encode_sorted_run_arrow_dict_codes_path():
-    """The dictionary-codes variant (sort-free encoder) must produce the
-    same blocks as the string-array path given any consistent ordering."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    rng = np.random.default_rng(47)
-    pdf = _sorted_run(rng, 20_000, 500, 4_000)
-    bs, bpr, base = 16, 7, 2_000
-
-    # string path on the canonically sorted run
-    want = codec.encode_sorted_run_arrow(
-        pa.array(list(pdf["term"]), type=pa.string()),
-        pdf["range_id"].to_numpy(np.int64),
-        pdf["doc_int"].to_numpy(np.int64),
-        pdf["tf"].to_numpy(np.int64),
-        pdf["factor"].to_numpy(np.float64),
-        block_size=bs, blocks_per_range=bpr, block_id_base=base,
-    ).to_pandas()
-
-    # dict-codes path on a SHUFFLED copy re-sorted by (code, rid, doc) —
-    # exactly what _make_encode_unsorted_fn does per partition
-    perm = rng.permutation(len(pdf))
-    shuf = pdf.iloc[perm].reset_index(drop=True)
-    dic = pc.dictionary_encode(pa.array(list(shuf["term"]), type=pa.string()))
-    codes = dic.indices.to_numpy().astype(np.int64)
-    rids = shuf["range_id"].to_numpy(np.int64)
-    docs = shuf["doc_int"].to_numpy(np.int64)
-    order = np.lexsort((docs, rids, codes))
-    got = codec.encode_sorted_run_arrow(
-        dic.dictionary,
-        rids[order],
-        docs[order],
-        shuf["tf"].to_numpy(np.int64)[order],
-        shuf["factor"].to_numpy(np.float64)[order],
-        block_size=bs, blocks_per_range=bpr, block_id_base=base,
-        term_codes=codes[order],
-    ).to_pandas()
-
-    key = ["term", "range_id", "block_id"]
-    want = want.sort_values(key).reset_index(drop=True)
-    got = got.sort_values(key).reset_index(drop=True)
-    assert len(want) == len(got)
-    for c in want.columns:
-        ov, nv = want[c].to_numpy(), got[c].to_numpy()
-        if c in ("term", "docs_enc", "tfs_enc", "factors_enc"):
-            assert all(a == b for a, b in zip(ov, nv)), c
-        else:
-            assert (ov == nv).all(), c
 
 
 def test_binary_offsets_overflow_guard():

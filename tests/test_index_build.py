@@ -298,203 +298,103 @@ def test_build_empty_and_degenerate_corpora(spark, tmp_path):
     assert wand.wand_topk(cat2, q, k=5).count() == 0
 
 
-def test_tf_agg_arrow_counterfactual_parity(spark, corpus):
-    """The fused-shuffle TF aggregator (measured-worse counterfactual of
-    stage 2's groupBy plan — see _make_tf_agg_arrow_fn) must produce the
-    identical postings relation."""
-    from pyspark.sql import functions as F
-
-    from bm25_pagerank_rpi_spark.functions.tokenize import tokens_col
-    from bm25_pagerank_rpi_spark.plans.index_build import _make_tf_agg_arrow_fn
-    from bm25_pagerank_rpi_spark.sources.catalog import term_bucket
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_int long, text string"
-    ).withColumn("doc_length", F.size(tokens_col("text")))
-    toks = docs.select(
-        "doc_int", "doc_length", F.explode(tokens_col("text")).alias("term")
-    ).withColumn("bucket", term_bucket("term", 4))
-    want = {
-        (r.term, r.doc_int): (r.tf, r.doc_length, r.bucket)
-        for r in toks.groupBy("term", "doc_int")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("tf"),
-            F.max("doc_length").alias("doc_length"),
-            F.max("bucket").alias("bucket"),
-        )
-        .collect()
-    }
-    got = {
-        (r.term, r.doc_int): (r.tf, r.doc_length, r.bucket)
-        for r in toks.repartition(4, "bucket", F.pmod(F.col("doc_int"), F.lit(2)))
-        .sortWithinPartitions("term", "doc_int")
-        .mapInArrow(
-            _make_tf_agg_arrow_fn(),
-            "term string, doc_int long, tf int, doc_length int, bucket int",
-        )
-        .collect()
-    }
-    assert got == want
+_NASTY = {
+    # Arrow-vs-Java whitespace divergence: \x1c-\x1f stay INSIDE tokens
+    "zz:0": "fs\x1cgs stays\x1done token lead\x1dpad",
+    # unicode whitespace runs, leading/trailing padding
+    "zz:1": "\u3000ideo ls nbsp\xa0 runs\t\tcollapse ",
+    "zz:2": "   ",
+    "zz:3": "repeat repeat repeat x",
+    "zz:4": "a b a\tb  a",
+}
 
 
-def test_hashed_term_keys_parity(spark, corpus, tmp_path):
-    """VERDICT r3 #2: the scale plan for the postings TF aggregation keys
-    on xxhash64(term) and restores strings via a dictionary join. The
-    output relation (and the whole downstream index) must be identical to
-    the string-keyed plan, and the manifest must record which plan ran."""
-
-    def build(dir_, **kw):
-        return build_index(
-            spark, transcripts_df(spark, corpus), str(dir_),
-            n_buckets=4, block_size=16, range_rows=32, **kw,
-        )
-
-    s = build(tmp_path / "s", term_keys="string")
-    h = build(tmp_path / "h", term_keys="hashed")
-
-    cols = ("term", "doc_int", "tf", "doc_length", "bucket")
-    want = {tuple(r[c] for c in cols) for r in s.postings().collect()}
-    got = {tuple(r[c] for c in cols) for r in h.postings().collect()}
-    assert got == want and want
-
-    assert s.read_manifest()["stages"]["postings"]["metrics"]["term_key_plan"] == "string"
-    assert h.read_manifest()["stages"]["postings"]["metrics"]["term_key_plan"] == "hashed"
-
-    # downstream identical too: terms table carries the same df/idf
-    t_s = {r.term: (r.df, round(r.idf, 12)) for r in s.terms().collect()}
-    t_h = {r.term: (r.df, round(r.idf, 12)) for r in h.terms().collect()}
-    assert t_s == t_h
-
-
-def test_hashed_term_keys_parity_with_positions(spark, corpus, tmp_path):
-    s = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "s"),
-        n_buckets=4, with_positions=True, term_keys="string",
-    )
-    h = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "h"),
-        n_buckets=4, with_positions=True, term_keys="hashed",
-    )
-    cols = ("term", "doc_int", "tf", "positions")
-    want = {(r.term, r.doc_int): (r.tf, list(r.positions)) for r in s.postings().collect()}
-    got = {(r.term, r.doc_int): (r.tf, list(r.positions)) for r in h.postings().collect()}
-    assert got == want and want
-
-
-def test_auto_term_keys_switches_on_vocab(spark, corpus, tmp_path):
-    """auto takes the fused kernel for both build shapes (the
-    measured-fastest, window-stable plan); 'auto-agg' keeps the
-    explode+groupBy family's sampled-vocabulary selector: string below
-    the threshold, hashed above it."""
-    lo = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "lo"), n_buckets=4
-    )
-    m = lo.read_manifest()["stages"]["postings"]["metrics"]
-    assert m["term_key_plan"] == "fused"
-
-    lo_p = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "lo_p"),
-        n_buckets=4, with_positions=True,
-    )
-    m_p = lo_p.read_manifest()["stages"]["postings"]["metrics"]
-    assert m_p["term_key_plan"] == "fused"
-
-    lo_agg = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "lo_agg"),
-        n_buckets=4, with_positions=True, term_keys="auto-agg",
-    )
-    m_a = lo_agg.read_manifest()["stages"]["postings"]["metrics"]
-    assert m_a["term_key_plan"] == "string" and m_a["est_vocab"] > 0
-
-    hi = build_index(
-        spark, transcripts_df(spark, corpus), str(tmp_path / "hi"),
-        n_buckets=4, with_positions=True, term_keys="auto-agg",
-        hashed_vocab_threshold=1,
-    )
-    m2 = hi.read_manifest()["stages"]["postings"]["metrics"]
-    assert m2["term_key_plan"] == "hashed"
-
-    cols = ("term", "doc_int", "tf")
-    assert (
-        {tuple(r[c] for c in cols) for r in lo.postings().collect()}
-        == {tuple(r[c] for c in cols) for r in hi.postings().collect()}
-    )
+def _oracle_positions(texts):
+    """(doc_id, term) -> sorted token positions under oracle.tokenize."""
+    out: dict[tuple[str, str], list[int]] = {}
+    for doc_id, text in texts.items():
+        for pos, term in enumerate(oracle.tokenize(text)):
+            out.setdefault((doc_id, term), []).append(pos)
+    return out
 
 
 def test_fused_kernel_parity(spark, corpus, tmp_path):
-    """The fused tokenize+TF mapInArrow plan must produce the identical
-    postings relation (and downstream terms table) as the string-keyed
-    groupBy plan, including on text that exercises the Arrow-vs-Java
-    whitespace divergence (\\x1c-\\x1f stay INSIDE tokens) and unicode
-    whitespace runs."""
-    nasty = dict(corpus)
-    nasty["zz:0"] = "fs\x1cgs stays\x1done token"
-    nasty["zz:1"] = "　ideo ls nbsp  runs\t\tcollapse "
-    nasty["zz:2"] = "   "
-    nasty["zz:3"] = "repeat repeat repeat x"
-
-    def build(dir_, **kw):
-        return build_index(
-            spark, transcripts_df(spark, nasty), str(dir_),
-            n_buckets=4, block_size=16, range_rows=32, **kw,
-        )
-
-    s = build(tmp_path / "s", term_keys="string")
-    f = build(tmp_path / "f", term_keys="fused")
-
-    cols = ("term", "doc_int", "tf", "doc_length", "bucket")
-    want = {tuple(r[c] for c in cols) for r in s.postings().collect()}
-    got = {tuple(r[c] for c in cols) for r in f.postings().collect()}
-    assert got == want and want
+    """The fused tokenize+TF postings plan must produce exactly the
+    oracle's postings relation (term, doc, tf, doc_length) and df/idf,
+    including on text that exercises the Arrow-vs-Java whitespace
+    divergence and unicode whitespace runs."""
+    nasty = {**corpus, **_NASTY}
+    cat = build_index(
+        spark, transcripts_df(spark, nasty), str(tmp_path / "f"),
+        n_buckets=4, block_size=16, range_rows=32,
+    )
+    index, dls, n, _ = oracle.build_index_from_texts(nasty)
+    meta = {r.doc_int: r.doc_id for r in cat.doc_meta().collect()}
+    want = {
+        (t, doc_id, tf, dls[doc_id])
+        for t, posts in index.items() for doc_id, tf in posts
+    }
+    rows = cat.postings().collect()
+    got = {(r.term, meta[r.doc_int], r.tf, r.doc_length) for r in rows}
+    assert got == want and len(rows) == len(want)
     assert any(t[0] == "fs\x1cgs" for t in got)  # \x1c fallback engaged
 
-    assert f.read_manifest()["stages"]["postings"]["metrics"]["term_key_plan"] == "fused"
-
-    t_s = {r.term: (r.df, round(r.idf, 12)) for r in s.terms().collect()}
-    t_f = {r.term: (r.df, round(r.idf, 12)) for r in f.terms().collect()}
-    assert t_s == t_f
+    terms = {r.term: r for r in cat.terms().collect()}
+    idf = oracle.idf_map(index, n)
+    assert set(terms) == set(index)
+    for t, posts in index.items():
+        assert terms[t].df == len(posts), t
+        assert abs(terms[t].idf - idf[t]) < 1e-12, t
+    # postings and terms agree on every term's bucket
+    assert all(terms[r.term].bucket == r.bucket for r in rows)
 
 
 def test_fused_kernel_positions_parity(spark, corpus, tmp_path):
-    """term_keys='fused' with positions must emit the identical
-    (term, doc, tf, positions) relation as the posexplode +
-    collect_list + sort_array string plan — positions index into the
+    """With positions, the fused kernel must emit the oracle's
+    (term, doc, tf, positions) relation — positions index into the
     empties-filtered token array and arrive sorted."""
-    nasty = dict(corpus)
-    nasty["zz:0"] = " lead pad lead\x1dpad lead "  # \x1c-\x1f fallback
-    nasty["zz:1"] = "a b a\tb  a"
-
-    def build(dir_, **kw):
-        return build_index(
-            spark, transcripts_df(spark, nasty), str(dir_),
-            n_buckets=4, block_size=16, range_rows=32,
-            with_positions=True, **kw,
-        )
-
-    s = build(tmp_path / "s", term_keys="string")
-    f = build(tmp_path / "f", term_keys="fused")
-    assert (
-        f.read_manifest()["stages"]["postings"]["metrics"]["term_key_plan"]
-        == "fused"
+    nasty = {**corpus, **_NASTY}
+    cat = build_index(
+        spark, transcripts_df(spark, nasty), str(tmp_path / "f"),
+        n_buckets=4, block_size=16, range_rows=32, with_positions=True,
     )
-
-    def rel(cat):
-        return {
-            (r.term, r.doc_int, r.tf, tuple(r.positions))
-            for r in cat.postings().collect()
-        }
-
-    want, got = rel(s), rel(f)
+    meta = {r.doc_int: r.doc_id for r in cat.doc_meta().collect()}
+    got = {
+        (r.term, meta[r.doc_int], r.tf, tuple(r.positions))
+        for r in cat.postings().collect()
+    }
+    want = {
+        (t, doc_id, len(p), tuple(p))
+        for (doc_id, t), p in _oracle_positions(nasty).items()
+    }
     assert got == want and want
     # spot-pin the tricky docs: \x1d stays inside a token, and repeated
     # terms carry their full sorted position lists
-    assert ("lead\x1dpad", *_one(got, "lead\x1dpad")[1:]) in got
-    a_rows = {t for t in got if t[0] == "a" and t[3] == (0, 2, 4)}
-    assert a_rows  # "a b a\tb  a" -> a at filtered positions 0, 2, 4
+    assert ("lead\x1dpad", "zz:0", 1, (3,)) in got
+    assert ("a", "zz:4", 3, (0, 2, 4)) in got
 
 
-def _one(rel, term):
-    return next(t for t in rel if t[0] == term)
+def test_compact_without_appends_matches_build(spark, corpus, tmp_path):
+    """Build and compaction encode through the same path: compacting a
+    fresh build (no appends, no deletes) must rewrite blocks and terms
+    row-identical to the build's own."""
+    from bm25_pagerank_rpi_spark.streaming.incremental import compact
+
+    cat = build_index(
+        spark, transcripts_df(spark, corpus), str(tmp_path / "idx"),
+        n_buckets=4, block_size=16, range_rows=32,
+    )
+
+    def rows(table):
+        df = cat.read(table)
+        return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    blocks, terms = rows("blocks"), rows("terms")
+    rids = {r.range_id for r in cat.blocks().select("range_id").distinct().collect()}
+    assert -1 in rids and len(rids) > 1  # tail and head routing both hit
+    compact(cat)
+    assert rows("blocks") == blocks
+    assert rows("terms") == terms
 
 
 def test_write_counted_matches_rescan(built):
@@ -540,23 +440,10 @@ _text_strategy = st.lists(
 
 
 def _ref_postings(texts):
-    """Pure-Python ground truth: Unicode White_Space-run split (the
-    reference strings.Fields / Java (?U)\\s semantics), TF + sorted
-    positions per (doc, term)."""
-    import re as _re
-
-    from bm25_pagerank_rpi_spark.plans.index_build import _WHITE_SPACE_RE
-
-    ws = _re.compile(_WHITE_SPACE_RE)
-    out = {}
-    for i, t in enumerate(texts):
-        toks = [x for x in ws.split(t or "") if x]
-        for pos, term in enumerate(toks):
-            tf_pos = out.setdefault((i, term), [])
-            tf_pos.append(pos)
-    return {
-        (doc, term, len(p), tuple(p)) for (doc, term), p in out.items()
-    }
+    """Pure-Python ground truth: the oracle tokenizer (reference
+    strings.Fields semantics), TF + sorted positions per (doc, term)."""
+    pos = _oracle_positions({i: t or "" for i, t in enumerate(texts)})
+    return {(doc, term, len(p), tuple(p)) for (doc, term), p in pos.items()}
 
 
 if _HAS_HYPOTHESIS:

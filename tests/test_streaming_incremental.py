@@ -302,13 +302,14 @@ def test_minor_compaction_merges_fragments_bit_identical(spark, tmp_path):
 
 def test_build_batch_size_isolated(spark, tmp_path):
     """The batch build enlarges the Arrow batch size only inside a cloned
-    session (plans/index_build.py stage_blocks); a concurrent consumer on
-    the build's own session must keep the default Arrow batch envelope.
+    session (plans/index_build.py _encode_session), created once and
+    reused by every build; a concurrent consumer on the build's own
+    session must keep the default Arrow batch envelope.
 
     Observed end-to-end: a mapInPandas over 25k rows on the main session
     yields >=2 batches under the 10k default, but would collapse to ONE
     batch if the build's 2^19-row override leaked session-globally."""
-    from bm25_pagerank_rpi_spark.plans.index_build import build_index
+    from bm25_pagerank_rpi_spark.plans.index_build import _encode_session, build_index
 
     batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     assert spark.conf.get(batch_key, "10000") in ("10000", None)
@@ -322,6 +323,10 @@ def test_build_batch_size_isolated(spark, tmp_path):
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
     build_index(spark, transcripts, str(tmp_path / "idx"), n_buckets=4)
+    clone = _encode_session(spark)
+    build_index(spark, transcripts, str(tmp_path / "idx2"), n_buckets=4)
+    assert _encode_session(spark) is clone  # one clone per SparkContext
+    assert clone.conf.get(batch_key) == str(1 << 19)
 
     # after the build the main session still reports the default…
     assert spark.conf.get(batch_key, "10000") in ("10000", None)

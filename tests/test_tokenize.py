@@ -2,19 +2,15 @@
 
 Pins: whitespace-run split, punctuation retained, empty/whitespace-only ->
 empty array, Unicode whitespace handled, and the Catalyst expression ==
-the pandas UDF == Go strings.Fields semantics.
+the Python splitter == the fused build kernel == Go strings.Fields
+semantics.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
-from bm25_pagerank_rpi_spark.functions.tokenize import (
-    tokenize_series,
-    tokenize_udf,
-    tokens_col,
-)
+from bm25_pagerank_rpi_spark.functions.tokenize import split_tokens, tokens_col
 from bm25_pagerank_rpi_spark.oracle import tokenize as oracle_tokenize
 
 CASES = [
@@ -31,6 +27,7 @@ CASES = [
     ("a b", ["a", "b"]),  # NBSP is Unicode whitespace (Go IsSpace)
     ("a b", ["a", "b"]),  # EM space
     ("naïve café", ["naïve", "café"]),
+    ("a\x1cb", ["a\x1cb"]),  # file separator: not White_Space (Go, Java)
 ]
 
 
@@ -41,8 +38,17 @@ def test_oracle_tokenize(text, expected):
 
 @pytest.mark.parametrize("text,expected", CASES)
 def test_pandas_tokenize(text, expected):
-    out = tokenize_series(pd.Series([text]))
-    assert list(out.iloc[0]) == expected
+    """The Python splitter (driver-side WAND planning, the fused
+    kernel's slow path)."""
+    assert split_tokens(text) == expected
+
+
+def test_python_splitter_matches_oracle_over_unicode():
+    """The package splitter's explicit White_Space table and the oracle's
+    independently written character class agree on every code point."""
+    every = (chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF)
+    text = "x".join(every)
+    assert split_tokens(text) == oracle_tokenize(text)
 
 
 def test_catalyst_tokenize(spark):
@@ -53,10 +59,22 @@ def test_catalyst_tokenize(spark):
 
 
 def test_udf_tokenize(spark):
-    df = spark.createDataFrame([(i, t) for i, (t, _) in enumerate(CASES)], "i int, text string")
-    rows = df.select("i", tokenize_udf("text").alias("toks")).orderBy("i").collect()
-    for (text, expected), row in zip(CASES, rows):
-        assert list(row.toks) == expected, f"pandas-udf mismatch on {text!r}"
+    """The build's fused tokenize+TF kernel run as a Spark ``mapInArrow``
+    UDF: the token sequence rebuilt from its per-posting positions must
+    equal the expected split."""
+    from bm25_pagerank_rpi_spark.plans.index_build import tf_postings
+
+    df = spark.createDataFrame(
+        [(i, 0, t) for i, (t, _) in enumerate(CASES)],
+        "doc_int long, doc_length int, text string",
+    )
+    got: dict[int, dict[int, str]] = {}
+    for r in tf_postings(df, with_positions=True).collect():
+        for p in r.positions:
+            got.setdefault(r.doc_int, {})[p] = r.term
+    for i, (text, expected) in enumerate(CASES):
+        toks = got.get(i, {})
+        assert [toks[p] for p in sorted(toks)] == expected, f"kernel mismatch on {text!r}"
 
 
 # ---------------------------------------------------------------------------
